@@ -24,6 +24,13 @@ prediction, stereo decorrelation, MD5-verified), and uncompressed-DIB
 AVI joined the supported set in round 11). Fake mode
 remains the deterministic byte-level plumbing path for arbitrary blobs.
 
+Spark plumbing: every Arrow-batched wrapper (``encode_*_assets``,
+``*_decode_stats``, ``*_frame_stats``, ``*_rows``, ``extract_features``,
+``resize_*``, ``cdc_chunks``, …) goes through ONE entry point,
+:func:`_map_assets` — select the input columns, zip them per Arrow
+batch, and emit the tuples a per-row function yields. The wrappers
+carry only that per-row function around the codec kernels.
+
 Scale notes: binary payloads ride in Arrow record batches; keep
 ``spark.sql.files.maxPartitionBytes`` sized so one partition of blobs fits
 executor memory, and repartition by a content-hash key before heavy decode
@@ -41,6 +48,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _ship_package(spark) -> None:
@@ -66,6 +74,35 @@ def _ship_package(spark) -> None:
                     z.write(full, os.path.relpath(full, root))
     sc.addPyFile(zpath)
     sc._pipes_spark_shipped = True
+
+
+def _map_assets(df: DataFrame, cols, row_fn, schema: str) -> DataFrame:
+    """The module's one Arrow-batch entry point: select ``cols`` from
+    ``df``, zip them per Arrow batch, and call ``row_fn(*values)`` on
+    every row. ``row_fn`` yields zero or more output tuples with fields
+    in ``schema`` order; each batch becomes one pandas frame with the
+    schema's column names (zero-row batches included)."""
+    _ship_package(df.sparkSession)
+    out_schema = StructType.fromDDL(schema)
+    names = out_schema.fieldNames()
+
+    def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame.from_records(
+                [
+                    out
+                    for values in pdf.itertuples(index=False, name=None)
+                    for out in row_fn(*values)
+                ],
+                columns=names,
+            )
+
+    return df.select(*cols).mapInPandas(per_batch, out_schema)
+
+
+#: Output of every ``encode_*_assets`` wrapper that emits a binary blob.
+_ENCODED_SCHEMA = "asset_id bigint, content binary"
+
 
 #: Typed metadata struct carried next to every blob.
 ASSET_SCHEMA = (
@@ -145,73 +182,6 @@ def binary_assets_from_text(df: DataFrame, id_col: str = "doc_id", text_col: str
     )
 
 
-def _decode_batch(pdf: pd.DataFrame, fake: bool) -> pd.DataFrame:
-    """Decode one Arrow batch of assets into per-asset features.
-
-    Real mode (round 11) dispatches through the module's OWN from-the-spec
-    codecs via :func:`decode_asset_values` — PNG/GIF/JPEG pixels, WAV PCM
-    samples — and emits value stats plus an 8-bucket embedding
-    (``REAL_FEATURE_SCHEMA``); genuinely unsupported formats raise
-    ``ValueError``. Fake mode derives deterministic 'features' from the
-    raw bytes so the plumbing is testable on arbitrary blobs.
-    """
-    import numpy as np
-
-    if not fake:
-        from pipes_spark.operators.multimodal import decode_asset_values
-
-        rows = []
-        for asset_id, content in zip(pdf["asset_id"], pdf["content"]):
-            fmt, vals, w, h = decode_asset_values(
-                content, label=f"asset {asset_id}"
-            )
-            n = int(vals.size)
-            # 8 contiguous buckets over the flattened value stream:
-            # bucket b covers [b*n//8, (b+1)*n//8) — SQL-expressible as
-            # bucket = i*8 // n, so the oracle recomputes it closed-form
-            cuts = [b * n // 8 for b in range(9)]
-            emb = [
-                float(vals[cuts[b] : cuts[b + 1]].mean())
-                if cuts[b + 1] > cuts[b]
-                else None
-                for b in range(8)
-            ]
-            rows.append(
-                {
-                    "asset_id": int(asset_id),
-                    "format": fmt,
-                    "width": w,
-                    "height": h,
-                    "n_values": n,
-                    "val_mean": float(vals.mean()),
-                    "val_min": int(vals.min()),
-                    "val_max": int(vals.max()),
-                    "val_sum": int(vals.sum()),
-                    "embedding": emb,
-                }
-            )
-        return pd.DataFrame(rows)
-
-    rows = []
-    for asset_id, content, meta in zip(pdf["asset_id"], pdf["content"], pdf["meta"]):
-        arr = np.frombuffer(content, dtype=np.uint8)
-        if arr.size == 0:
-            arr = np.zeros(1, dtype=np.uint8)
-        emb = (arr[:8].astype(np.float32) / 255.0) if arr.size >= 8 else np.zeros(8, np.float32)
-        rows.append(
-            {
-                "asset_id": asset_id,
-                "format": meta["format"] if isinstance(meta, dict) else meta.format,
-                "n_bytes": int(arr.size),
-                "byte_mean": float(round(arr.mean(), 6)),
-                "byte_min": int(arr.min()),
-                "byte_max": int(arr.max()),
-                "fake_embedding": [float(x) for x in emb],
-            }
-        )
-    return pd.DataFrame(rows)
-
-
 def extract_features(assets: DataFrame, fake: bool = True) -> DataFrame:
     """Per-asset feature extraction via mapInPandas (Arrow-batched; the
     canonical shape for any decode/resize/frame-sample operator). Real
@@ -222,16 +192,49 @@ def extract_features(assets: DataFrame, fake: bool = True) -> DataFrame:
     it under a closed-form oracle). Formats beyond the engine's codecs
     (compressed audio, arbitrary containers) raise ``ValueError``; fake
     mode remains the deterministic byte-level plumbing path for those."""
+    import numpy as np
 
-    _ship_package(assets.sparkSession)
+    def decoded(asset_id, content):
+        fmt, vals, w, h = decode_asset_values(content, label=f"asset {asset_id}")
+        n = int(vals.size)
+        # 8 contiguous buckets over the flattened value stream:
+        # bucket b covers [b*n//8, (b+1)*n//8) — SQL-expressible as
+        # bucket = i*8 // n, so the oracle recomputes it closed-form
+        cuts = [b * n // 8 for b in range(9)]
+        emb = [
+            float(vals[cuts[b] : cuts[b + 1]].mean())
+            if cuts[b + 1] > cuts[b]
+            else None
+            for b in range(8)
+        ]
+        yield (
+            int(asset_id), fmt, w, h, n, float(vals.mean()),
+            int(vals.min()), int(vals.max()), int(vals.sum()), emb,
+        )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield _decode_batch(pdf, fake)
+    def raw_bytes(asset_id, content, meta):
+        # fake mode: deterministic 'features' from the raw bytes, so the
+        # plumbing is testable on arbitrary blobs
+        arr = np.frombuffer(content, dtype=np.uint8)
+        if arr.size == 0:
+            arr = np.zeros(1, dtype=np.uint8)
+        emb = (arr[:8].astype(np.float32) / 255.0) if arr.size >= 8 else np.zeros(8, np.float32)
+        yield (
+            asset_id,
+            meta["format"] if isinstance(meta, dict) else meta.format,
+            int(arr.size),
+            float(round(arr.mean(), 6)),
+            int(arr.min()),
+            int(arr.max()),
+            [float(x) for x in emb],
+        )
 
-    return assets.mapInPandas(
-        gen, schema=FEATURE_SCHEMA if fake else REAL_FEATURE_SCHEMA
+    if fake:
+        return _map_assets(
+            assets, ["asset_id", "content", "meta"], raw_bytes, FEATURE_SCHEMA
+        )
+    return _map_assets(
+        assets, ["asset_id", "content"], decoded, REAL_FEATURE_SCHEMA
     )
 
 
@@ -242,26 +245,15 @@ def frame_sample(assets: DataFrame, every_n_bytes: int = 64) -> DataFrame:
     decodes Motion-JPEG frames — this byte-offset variant remains for
     formats the engine cannot yet parse."""
 
-    _ship_package(assets.sparkSession)
+    def row(asset_id, content):
+        for off in range(0, len(content), every_n_bytes):
+            yield (asset_id, off // every_n_bytes, off, int(content[off]))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for asset_id, content in zip(pdf["asset_id"], pdf["content"]):
-                for off in range(0, len(content), every_n_bytes):
-                    out.append(
-                        {
-                            "asset_id": asset_id,
-                            "frame_no": off // every_n_bytes,
-                            "offset": off,
-                            "sample_byte": int(content[off]),
-                        }
-                    )
-            if out:
-                yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen, schema="asset_id bigint, frame_no int, offset int, sample_byte int"
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
+        "asset_id bigint, frame_no int, offset int, sample_byte int",
     )
 
 
@@ -280,51 +272,30 @@ def resize_image_assets(
     mapInPandas; pixels never cross a shuffle (catalog
     ``multimodal_resize`` decodes the output and hash-checks every
     resized pixel against a closed-form oracle)."""
-    spark = assets.sparkSession
-    _ship_package(spark)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(asset_id, content):
+        px = decode_image_gray(bytes(content)).astype(np.int64)
+        h, w = px.shape
+        if out_w > w or out_h > h:
+            raise ValueError(
+                f"asset {asset_id}: upscaling not supported "
+                f"({w}x{h} -> {out_w}x{out_h})"
+            )
+        ry = np.arange(h) * out_h // h
+        rx = np.arange(w) * out_w // w
+        sums = np.zeros((out_h, out_w), dtype=np.int64)
+        cnts = np.zeros((out_h, out_w), dtype=np.int64)
+        np.add.at(sums, (ry[:, None], rx[None, :]), px)
+        np.add.at(cnts, (ry[:, None], rx[None, :]), 1)
+        png = png_encode_array((sums // cnts).astype(np.uint8))
+        yield (int(asset_id), png, out_w, out_h, len(png))
 
-        from pipes_spark.operators.multimodal import (
-            decode_image_gray,
-            png_encode_array,
-        )
-
-        for pdf in batches:
-            rows = []
-            for asset_id, content in zip(pdf["asset_id"], pdf["content"]):
-                px = decode_image_gray(bytes(content)).astype(np.int64)
-                h, w = px.shape
-                if out_w > w or out_h > h:
-                    raise ValueError(
-                        f"asset {asset_id}: upscaling not supported "
-                        f"({w}x{h} -> {out_w}x{out_h})"
-                    )
-                ry = np.arange(h) * out_h // h
-                rx = np.arange(w) * out_w // w
-                sums = np.zeros((out_h, out_w), dtype=np.int64)
-                cnts = np.zeros((out_h, out_w), dtype=np.int64)
-                np.add.at(sums, (ry[:, None], rx[None, :]), px)
-                np.add.at(cnts, (ry[:, None], rx[None, :]), 1)
-                out = (sums // cnts).astype(np.uint8)
-                rows.append(
-                    {
-                        "asset_id": int(asset_id),
-                        "content": png_encode_array(out),
-                        "width": out_w,
-                        "height": out_h,
-                        "n_bytes": 0,
-                    }
-                )
-            if rows:
-                pdf2 = pd.DataFrame(rows)
-                pdf2["n_bytes"] = pdf2["content"].map(len)
-                yield pdf2
-
-    return assets.mapInPandas(
-        gen,
-        schema="asset_id bigint, content binary, width int, height int, n_bytes bigint",
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
+        "asset_id bigint, content binary, width int, height int, n_bytes bigint",
     )
 
 
@@ -333,36 +304,15 @@ def decoded_pixels(assets: DataFrame) -> DataFrame:
     the sniff-and-dispatch decoder — the verification read behind the
     resize gate (bounded use: call on SMALL images only; pixels DO cross
     the shuffle here by design)."""
-    spark = assets.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(asset_id, content):
+        aid = int(asset_id)
+        for y, line in enumerate(decode_image_gray(bytes(content)).tolist()):
+            for x, v in enumerate(line):
+                yield (aid, y, x, v)
 
-        from pipes_spark.operators.multimodal import decode_image_gray
-
-        for pdf in batches:
-            ids, ys, xs, vs = [], [], [], []
-            for asset_id, content in zip(pdf["asset_id"], pdf["content"]):
-                px = decode_image_gray(bytes(content)).astype(np.int64)
-                h, w = px.shape
-                yy, xx = np.meshgrid(np.arange(h), np.arange(w), indexing="ij")
-                ids.append(np.full(h * w, int(asset_id), dtype=np.int64))
-                ys.append(yy.reshape(-1))
-                xs.append(xx.reshape(-1))
-                vs.append(px.reshape(-1))
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "asset_id": np.concatenate(ids),
-                        "y": np.concatenate(ys).astype("int32"),
-                        "x": np.concatenate(xs).astype("int32"),
-                        "v": np.concatenate(vs).astype("int32"),
-                    }
-                )
-
-    return assets.mapInPandas(
-        gen, schema="asset_id bigint, y int, x int, v int"
+    return _map_assets(
+        assets, ["asset_id", "content"], row, "asset_id bigint, y int, x int, v int"
     )
 
 
@@ -373,30 +323,17 @@ def resize_stub(assets: DataFrame, width: int = 32, height: int = 32) -> DataFra
     since round 11 the REAL path exists (:func:`resize_image_assets`,
     decode → box-mean → PNG re-encode); this byte-level variant remains
     for formats the engine cannot decode."""
-
-    _ship_package(assets.sparkSession)
     target = width * height
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, content in zip(pdf["asset_id"], pdf["content"]):
-                body = bytes(content[:target]).ljust(target, b"\0")
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "content": body,
-                        "width": width,
-                        "height": height,
-                        "n_bytes": len(body),
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
+    def row(asset_id, content):
+        body = bytes(content[:target]).ljust(target, b"\0")
+        yield (asset_id, body, width, height, len(body))
 
-    return assets.mapInPandas(
-        gen,
-        schema="asset_id bigint, content binary, width int, height int, n_bytes bigint",
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
+        "asset_id bigint, content binary, width int, height int, n_bytes bigint",
     )
 
 
@@ -424,69 +361,52 @@ def cdc_chunks(
     """
     import hashlib
 
+    import numpy as np
+
     if not (0 < min_size <= max_size) or avg_size < 1:
         raise ValueError(
             f"need 0 < min_size <= max_size and avg_size >= 1, got "
             f"{min_size}, {max_size}, {avg_size}"
         )
-    spark = assets.sparkSession
-    _ship_package(spark)
+    # fixed random byte→weight table (deterministic seed) — the Buzhash
+    # convention; the window hash is a weighted sum mod 2^32
+    table = np.random.RandomState(42).randint(0, 2**31 - 1, size=256, dtype=np.int64)
+    win = 8
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(aid, blob):
+        if blob is None:
+            return
+        b = np.frombuffer(bytes(blob), dtype=np.uint8)
+        n = len(b)
+        if n == 0:
+            return
+        # rolling window hash at every position ≥ win
+        if n >= win:
+            w = table[b]
+            csum = np.concatenate([[0], np.cumsum(w)])
+            roll = (csum[win:] - csum[:-win]) % (2**32)
+        else:
+            roll = np.empty(0, dtype=np.int64)
+        starts = [0]
+        last = 0
+        pos = win
+        while pos < n:
+            at_boundary = roll[pos - win] % avg_size == 0
+            size = pos - last
+            if (at_boundary and size >= min_size) or size >= max_size:
+                starts.append(pos)
+                last = pos
+            pos += 1
+        for i, s in enumerate(starts):
+            e = starts[i + 1] if i + 1 < len(starts) else n
+            piece = bytes(blob)[s:e]
+            yield (aid, i, s, e - s, hashlib.md5(piece).hexdigest())
 
-        # fixed random byte→weight table (deterministic seed) — the Buzhash
-        # convention; the window hash is a weighted sum mod 2^32
-        rng = np.random.RandomState(42)
-        table = rng.randint(0, 2**31 - 1, size=256, dtype=np.int64)
-        win = 8
-        for pdf in batches:
-            out_ids, out_idx, out_off, out_len, out_hash = [], [], [], [], []
-            for aid, blob in zip(pdf[id_col], pdf[content_col]):
-                if blob is None:
-                    continue
-                b = np.frombuffer(bytes(blob), dtype=np.uint8)
-                n = len(b)
-                if n == 0:
-                    continue
-                # rolling window hash at every position ≥ win
-                if n >= win:
-                    w = table[b]
-                    csum = np.concatenate([[0], np.cumsum(w)])
-                    roll = (csum[win:] - csum[:-win]) % (2**32)
-                else:
-                    roll = np.empty(0, dtype=np.int64)
-                starts = [0]
-                last = 0
-                pos = win
-                while pos < n:
-                    at_boundary = roll[pos - win] % avg_size == 0
-                    size = pos - last
-                    if (at_boundary and size >= min_size) or size >= max_size:
-                        starts.append(pos)
-                        last = pos
-                    pos += 1
-                for i, s in enumerate(starts):
-                    e = starts[i + 1] if i + 1 < len(starts) else n
-                    piece = bytes(blob)[s:e]
-                    out_ids.append(aid)
-                    out_idx.append(i)
-                    out_off.append(s)
-                    out_len.append(e - s)
-                    out_hash.append(hashlib.md5(piece).hexdigest())
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(out_ids, dtype="int64"),
-                    "chunk_idx": pd.Series(out_idx, dtype="int64"),
-                    "offset": pd.Series(out_off, dtype="int64"),
-                    "length": pd.Series(out_len, dtype="int64"),
-                    "chunk_hash": pd.Series(out_hash, dtype="object"),
-                }
-            )
-
-    return assets.select(id_col, content_col).mapInPandas(
-        gen,
-        schema=f"{id_col} bigint, chunk_idx bigint, offset bigint, length bigint, chunk_hash string",
+    return _map_assets(
+        assets,
+        [id_col, content_col],
+        row,
+        f"{id_col} bigint, chunk_idx bigint, offset bigint, length bigint, chunk_hash string",
     )
 
 
@@ -507,53 +427,44 @@ def perceptual_hash(
     Returns ``(asset_id, phash bigint)`` — 8 bytes per asset through any
     downstream shuffle, never the content.
     """
+    import numpy as np
+
     from .scale import ensure_min_partitions
 
-    _ship_package(assets.sparkSession)
     if ensure_partitions:
         # skip when the caller already sized partitions upstream:
         # the probe (df.rdd.getNumPartitions) would otherwise execute
         # the upstream AQE shuffle stage at CONSTRUCTION time
         assets = ensure_min_partitions(assets)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(asset_id, content):
+        if fake:
+            arr = np.frombuffer(content, dtype=np.uint8).astype(np.int64)
+        else:
+            _fmt, arr, _w, _h = decode_asset_values(
+                content, label=f"asset {asset_id}"
+            )
+        if arr.size == 0:
+            arr = np.zeros(64, dtype=np.int64)
+        pad = (-arr.size) % 64
+        a = np.pad(arr, (0, pad), mode="wrap")
+        blocks = a.reshape(64, -1).mean(axis=1)
+        # threshold on the GLOBAL value mean — equal to the mean
+        # of the 64 equal-sized block means mathematically, but
+        # float-exact (one integer sum, one IEEE division), so
+        # the oracle's sequential and numpy's pairwise summation
+        # cannot disagree in the last ulp
+        bits = blocks > a.mean()
+        h = 0
+        for b in bits:
+            h = (h << 1) | int(b)
+        if h >= 1 << 63:
+            h -= 1 << 64  # signed 64-bit for the BIGINT column
+        yield (int(asset_id), h)
 
-        from pipes_spark.operators.multimodal import decode_asset_values
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for asset_id, content in zip(pdf["asset_id"], pdf["content"]):
-                if fake:
-                    arr = np.frombuffer(content, dtype=np.uint8).astype(
-                        np.int64
-                    )
-                else:
-                    _fmt, arr, _w, _h = decode_asset_values(
-                        content, label=f"asset {asset_id}"
-                    )
-                if arr.size == 0:
-                    arr = np.zeros(64, dtype=np.int64)
-                pad = (-arr.size) % 64
-                a = np.pad(arr, (0, pad), mode="wrap")
-                blocks = a.reshape(64, -1).mean(axis=1)
-                # threshold on the GLOBAL value mean — equal to the mean
-                # of the 64 equal-sized block means mathematically, but
-                # float-exact (one integer sum, one IEEE division), so
-                # the oracle's sequential and numpy's pairwise summation
-                # cannot disagree in the last ulp
-                bits = blocks > a.mean()
-                h = 0
-                for b in bits:
-                    h = (h << 1) | int(b)
-                if h >= 1 << 63:
-                    h -= 1 << 64  # signed 64-bit for the BIGINT column
-                out.append({"asset_id": int(asset_id), "phash": h})
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(gen, schema="asset_id bigint, phash bigint")
+    return _map_assets(
+        assets, ["asset_id", "content"], row, "asset_id bigint, phash bigint"
+    )
 
 
 def phash_pairs(hashes: DataFrame, max_hamming: int = 7) -> DataFrame:
@@ -745,28 +656,11 @@ def encode_png_assets(
     side in batch — at 100 TB the encode is embarrassingly parallel and
     pixels never cross a shuffle (the module's features-not-pixels
     rule; downstream ops reduce to metadata before any exchange)."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import png_encode_gray
+    def row(i, w, h):
+        yield (int(i), png_encode_gray(int(i), int(w), int(h)))
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        png_encode_gray(int(i), int(w), int(h))
-                        for i, w, h in zip(
-                            pdf[id_col], pdf[width_col], pdf[height_col]
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, width_col, height_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
-    )
+    return _map_assets(df, [id_col, width_col, height_col], row, _ENCODED_SCHEMA)
 
 
 def png_decode_stats(assets: DataFrame) -> DataFrame:
@@ -779,59 +673,39 @@ def png_decode_stats(assets: DataFrame) -> DataFrame:
     ``multimodal_png_roundtrip``). Only filter-0 scanlines (what
     :func:`png_encode_gray` emits) are supported; anything else raises
     loudly rather than guessing."""
-    spark = assets.sparkSession
-    _ship_package(spark)
+    import struct
+    import zlib as _z
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib as _z
+    import numpy as np
 
-        import numpy as np
+    def row(aid, content):
+        content = bytes(content)
+        fmt, w, h, depth, ctype = sniff_image_header(content)
+        if fmt != "png":
+            raise ValueError(f"asset {aid}: not a PNG")
+        idat, i = b"", 8
+        while i + 8 <= len(content):
+            (ln,) = struct.unpack(">I", content[i : i + 4])
+            typ = content[i + 4 : i + 8]
+            if typ == b"IDAT":
+                idat += content[i + 8 : i + 8 + ln]
+            i += 12 + ln
+            if typ == b"IEND":
+                break
+        raw = np.frombuffer(_z.decompress(idat), dtype=np.uint8)
+        scan = raw.reshape(h, w + 1)
+        if scan[:, 0].any():
+            raise ValueError(f"asset {aid}: non-zero PNG filter type")
+        px = scan[:, 1:]
+        yield (
+            int(aid), fmt, w, h, depth, ctype,
+            int(px.size), int(px.sum(dtype=np.int64)),
+        )
 
-        from pipes_spark.operators.multimodal import sniff_image_header
-
-        for pdf in batches:
-            out = {
-                "asset_id": [],
-                "format": [],
-                "width": [],
-                "height": [],
-                "bit_depth": [],
-                "color_type": [],
-                "n_pixels": [],
-                "pixel_sum": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                content = bytes(content)
-                fmt, w, h, depth, ctype = sniff_image_header(content)
-                if fmt != "png":
-                    raise ValueError(f"asset {aid}: not a PNG")
-                idat, i = b"", 8
-                while i + 8 <= len(content):
-                    (ln,) = struct.unpack(">I", content[i : i + 4])
-                    typ = content[i + 4 : i + 8]
-                    if typ == b"IDAT":
-                        idat += content[i + 8 : i + 8 + ln]
-                    i += 12 + ln
-                    if typ == b"IEND":
-                        break
-                raw = np.frombuffer(_z.decompress(idat), dtype=np.uint8)
-                scan = raw.reshape(h, w + 1)
-                if scan[:, 0].any():
-                    raise ValueError(f"asset {aid}: non-zero PNG filter type")
-                px = scan[:, 1:]
-                out["asset_id"].append(int(aid))
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["bit_depth"].append(depth)
-                out["color_type"].append(ctype)
-                out["n_pixels"].append(int(px.size))
-                out["pixel_sum"].append(int(px.sum(dtype=np.int64)))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
         "asset_id bigint, format string, width int, height int, "
         "bit_depth int, color_type int, n_pixels bigint, pixel_sum bigint",
     )
@@ -1071,36 +945,84 @@ def encode_gif_assets(
     parallel mapInPandas, pixels never cross a shuffle). An optional
     boolean ``interlace_col`` stores those images in the spec's 4-pass
     interlaced row order (exercising the decoder's de-interlace path)."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    cols = [id_col, width_col, height_col]
-    if interlace_col is not None:
-        cols.append(interlace_col)
+    interlaced = F.lit(False) if interlace_col is None else interlace_col
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import gif_encode_gray
+    def row(i, w, h, f):
+        yield (int(i), gif_encode_gray(int(i), int(w), int(h), bool(f)))
 
-        for pdf in batches:
-            il = (
-                pdf[interlace_col]
-                if interlace_col is not None
-                else [False] * len(pdf)
-            )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        gif_encode_gray(int(i), int(w), int(h), bool(f))
-                        for i, w, h, f in zip(
-                            pdf[id_col], pdf[width_col], pdf[height_col], il
-                        )
-                    ],
-                }
-            )
-
-    return df.select(*cols).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, width_col, height_col, interlaced], row, _ENCODED_SCHEMA
     )
+
+
+def _gif_first_frame(b: bytes, label: str):
+    """Walk a GIF to its FIRST image block: header + logical-screen
+    parse, global/local color table, extension-block walk,
+    variable-width LZW inflate and de-interlace. Returns
+    ``(bit_depth, palette (n, 3) uint8, index grid (h, w))``.
+    Truncated/corrupt files raise ``ValueError`` rather than guessing:
+    trailer before the image, pixel count off the descriptor, or an
+    index beyond the palette."""
+    import struct
+
+    import numpy as np
+
+    if b[:6] not in (b"GIF87a", b"GIF89a") or len(b) < 13:
+        raise ValueError(f"{label}: not a GIF")
+    _sw, _sh, packed, _bg, _ar = struct.unpack("<HHBBB", b[6:13])
+    depth = ((packed >> 4) & 0x7) + 1
+    i = 13
+    palette = None
+    if packed & 0x80:
+        gct_n = 2 << (packed & 0x7)
+        palette = np.frombuffer(
+            b[i : i + 3 * gct_n], dtype=np.uint8
+        ).reshape(gct_n, 3)
+        i += 3 * gct_n
+    while i < len(b):
+        blk = b[i]
+        i += 1
+        if blk == 0x21:  # extension: label + sub-blocks
+            i += 1
+            while b[i]:
+                i += 1 + b[i]
+            i += 1
+            continue
+        if blk == 0x3B:
+            raise ValueError(f"{label}: trailer before image")
+        if blk != 0x2C:
+            raise ValueError(f"{label}: unknown block 0x{blk:02x}")
+        _l, _t, w, h, ipk = struct.unpack("<HHHHB", b[i : i + 9])
+        i += 9
+        if ipk & 0x80:  # local color table overrides
+            lct_n = 2 << (ipk & 0x7)
+            palette = np.frombuffer(
+                b[i : i + 3 * lct_n], dtype=np.uint8
+            ).reshape(lct_n, 3)
+            i += 3 * lct_n
+        if palette is None:
+            raise ValueError(f"{label}: no color table")
+        mcs = b[i]
+        i += 1
+        lzw = bytearray()
+        while b[i]:
+            ln = b[i]
+            lzw += b[i + 1 : i + 1 + ln]
+            i += 1 + ln
+        idx = np.frombuffer(
+            bytes(_gif_lzw_decode(bytes(lzw), mcs)), dtype=np.uint8
+        )
+        if idx.size != w * h:
+            raise ValueError(
+                f"{label}: decoded {idx.size} pixels, expected {w * h}"
+            )
+        if int(idx.max(initial=0)) >= len(palette):
+            raise ValueError(f"{label}: index beyond palette")
+        stored = idx.reshape(h, w)
+        grid = np.empty_like(stored)
+        grid[_gif_row_order(h, bool(ipk & 0x40)), :] = stored
+        return depth, palette, grid
+    raise ValueError(f"{label}: truncated GIF")
 
 
 def gif_decode_stats(assets: DataFrame) -> DataFrame:
@@ -1115,106 +1037,21 @@ def gif_decode_stats(assets: DataFrame) -> DataFrame:
     ``multimodal_gif_roundtrip``; the png_decode_stats precedent).
     Stats cover the FIRST image block (for animations, frame 0);
     truncated/corrupt files raise loudly rather than guessing."""
-    spark = assets.sparkSession
-    _ship_package(spark)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            _gif_lzw_decode,
-            _gif_row_order,
+    def row(aid, content):
+        depth, palette, grid = _gif_first_frame(bytes(content), f"asset {aid}")
+        red = palette[:, 0][grid]
+        h, w = grid.shape
+        yield (
+            int(aid), "gif", int(w), int(h), int(depth), int(len(palette)),
+            int(red.size), int(red.sum(dtype=np.int64)),
         )
 
-        for pdf in batches:
-            out = {
-                "asset_id": [],
-                "format": [],
-                "width": [],
-                "height": [],
-                "bit_depth": [],
-                "n_colors": [],
-                "n_pixels": [],
-                "pixel_sum": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                b = bytes(content)
-                if b[:6] not in (b"GIF87a", b"GIF89a") or len(b) < 13:
-                    raise ValueError(f"asset {aid}: not a GIF")
-                _sw, _sh, packed, _bg, _ar = struct.unpack("<HHBBB", b[6:13])
-                depth = ((packed >> 4) & 0x7) + 1
-                i = 13
-                palette = None
-                if packed & 0x80:
-                    gct_n = 2 << (packed & 0x7)
-                    palette = np.frombuffer(
-                        b[i : i + 3 * gct_n], dtype=np.uint8
-                    ).reshape(gct_n, 3)
-                    i += 3 * gct_n
-                while i < len(b):
-                    blk = b[i]
-                    i += 1
-                    if blk == 0x21:  # extension: label + sub-blocks
-                        i += 1
-                        while b[i]:
-                            i += 1 + b[i]
-                        i += 1
-                        continue
-                    if blk == 0x3B:
-                        raise ValueError(f"asset {aid}: trailer before image")
-                    if blk != 0x2C:
-                        raise ValueError(
-                            f"asset {aid}: unknown block 0x{blk:02x}"
-                        )
-                    _l, _t, w, h, ipk = struct.unpack("<HHHHB", b[i : i + 9])
-                    i += 9
-                    if ipk & 0x80:  # local color table overrides
-                        lct_n = 2 << (ipk & 0x7)
-                        palette = np.frombuffer(
-                            b[i : i + 3 * lct_n], dtype=np.uint8
-                        ).reshape(lct_n, 3)
-                        i += 3 * lct_n
-                    if palette is None:
-                        raise ValueError(f"asset {aid}: no color table")
-                    mcs = b[i]
-                    i += 1
-                    lzw = bytearray()
-                    while b[i]:
-                        ln = b[i]
-                        lzw += b[i + 1 : i + 1 + ln]
-                        i += 1 + ln
-                    i += 1
-                    idx = np.frombuffer(
-                        bytes(_gif_lzw_decode(bytes(lzw), mcs)), dtype=np.uint8
-                    )
-                    if idx.size != w * h:
-                        raise ValueError(
-                            f"asset {aid}: decoded {idx.size} pixels, "
-                            f"expected {w * h}"
-                        )
-                    if int(idx.max(initial=0)) >= len(palette):
-                        raise ValueError(f"asset {aid}: index beyond palette")
-                    stored = idx.reshape(h, w)
-                    grid = np.empty_like(stored)
-                    grid[_gif_row_order(h, bool(ipk & 0x40)), :] = stored
-                    red = palette[:, 0][grid]
-                    out["asset_id"].append(int(aid))
-                    out["format"].append("gif")
-                    out["width"].append(int(w))
-                    out["height"].append(int(h))
-                    out["bit_depth"].append(int(depth))
-                    out["n_colors"].append(int(len(palette)))
-                    out["n_pixels"].append(int(red.size))
-                    out["pixel_sum"].append(int(red.sum(dtype=np.int64)))
-                    break
-                else:
-                    raise ValueError(f"asset {aid}: truncated GIF")
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
         "asset_id bigint, format string, width int, height int, "
         "bit_depth int, n_colors int, n_pixels bigint, pixel_sum bigint",
     )
@@ -2537,53 +2374,21 @@ def encode_jpeg_assets(
     those images to Annex-K.2 per-image Huffman tables — so the
     decoder's resync AND variable-length-table paths both run under the
     gate."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    cols = [id_col, width_col, height_col]
-    if restart_col is not None:
-        cols.append(restart_col)
-    if optimize_col is not None:
-        cols.append(optimize_col)
+    restart = F.lit(0) if restart_col is None else restart_col
+    optimize = F.lit(False) if optimize_col is None else optimize_col
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import (
-            jpeg_block_gray,
-            jpeg_encode_gray,
+    def row(i, w, h, r, o):
+        yield (
+            int(i),
+            jpeg_encode_gray(
+                jpeg_block_gray(int(i), int(w), int(h)),
+                restart_interval=int(r),
+                optimize_huffman=bool(o),
+            ),
         )
 
-        for pdf in batches:
-            ri = (
-                pdf[restart_col]
-                if restart_col is not None
-                else [0] * len(pdf)
-            )
-            opt = (
-                pdf[optimize_col]
-                if optimize_col is not None
-                else [False] * len(pdf)
-            )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        jpeg_encode_gray(
-                            jpeg_block_gray(int(i), int(w), int(h)),
-                            restart_interval=int(r),
-                            optimize_huffman=bool(o),
-                        )
-                        for i, w, h, r, o in zip(
-                            pdf[id_col],
-                            pdf[width_col],
-                            pdf[height_col],
-                            ri,
-                            opt,
-                        )
-                    ],
-                }
-            )
-
-    return df.select(*cols).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, width_col, height_col, restart, optimize], row, _ENCODED_SCHEMA
     )
 
 
@@ -2597,46 +2402,23 @@ def jpeg_decode_stats(assets: DataFrame) -> DataFrame:
     block-constant oracle certifies the decoder end to end (catalog
     ``multimodal_jpeg_roundtrip``; the png/gif precedent). Corrupt or
     out-of-scope files (progressive, color, 12-bit) raise loudly."""
-    spark = assets.sparkSession
-    _ship_package(spark)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            jpeg_decode_gray,
-            sniff_image_header,
+    def row(aid, content):
+        b = bytes(content)
+        fmt, w, h, depth, ncomp = sniff_image_header(b)
+        if fmt != "jpeg":
+            raise ValueError(f"asset {aid}: not a JPEG")
+        px = jpeg_decode_gray(b)
+        yield (
+            int(aid), fmt, int(px.shape[1]), int(px.shape[0]), int(depth),
+            int(ncomp), int(px.size), int(px.sum(dtype=np.int64)),
         )
 
-        for pdf in batches:
-            out = {
-                "asset_id": [],
-                "format": [],
-                "width": [],
-                "height": [],
-                "bit_depth": [],
-                "n_components": [],
-                "n_pixels": [],
-                "pixel_sum": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                b = bytes(content)
-                fmt, w, h, depth, ncomp = sniff_image_header(b)
-                if fmt != "jpeg":
-                    raise ValueError(f"asset {aid}: not a JPEG")
-                px = jpeg_decode_gray(b)
-                out["asset_id"].append(int(aid))
-                out["format"].append(fmt)
-                out["width"].append(int(px.shape[1]))
-                out["height"].append(int(px.shape[0]))
-                out["bit_depth"].append(int(depth))
-                out["n_components"].append(int(ncomp))
-                out["n_pixels"].append(int(px.size))
-                out["pixel_sum"].append(int(px.sum(dtype=np.int64)))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
         "asset_id bigint, format string, width int, height int, "
         "bit_depth int, n_components int, n_pixels bigint, pixel_sum bigint",
     )
@@ -2887,28 +2669,12 @@ def encode_wav_g711_assets(
 ) -> DataFrame:
     """Arrow-batched G.711 companded-WAV encode: (id, n_samples, rate,
     law 'ulaw'|'alaw') → (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import wav_encode_g711
+    def row(i, n, r, lw):
+        yield (int(i), wav_encode_g711(int(i), int(n), int(r), str(lw)))
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        wav_encode_g711(int(i), int(n), int(r), str(lw))
-                        for i, n, r, lw in zip(
-                            pdf[id_col], pdf[samples_col], pdf[rate_col],
-                            pdf[law_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, samples_col, rate_col, law_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, samples_col, rate_col, law_col], row, _ENCODED_SCHEMA
     )
 
 
@@ -3022,28 +2788,36 @@ def encode_aiff_assets(
 ) -> DataFrame:
     """Arrow-batched AIFF encode: (id, n_samples, rate, channels) →
     (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import aiff_encode_pcm16
+    def row(i, n, r, c):
+        yield (int(i), aiff_encode_pcm16(int(i), int(n), int(r), int(c)))
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        aiff_encode_pcm16(int(i), int(n), int(r), int(c))
-                        for i, n, r, c in zip(
-                            pdf[id_col], pdf[samples_col], pdf[rate_col],
-                            pdf[channels_col],
-                        )
-                    ],
-                }
-            )
+    return _map_assets(
+        df, [id_col, samples_col, rate_col, channels_col], row, _ENCODED_SCHEMA
+    )
 
-    return df.select(id_col, samples_col, rate_col, channels_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+
+def _pcm_decode_stats(assets: DataFrame, fmt: str, decode) -> DataFrame:
+    """The PCM checksum row shared by :func:`wav_decode_stats` and
+    :func:`aiff_decode_stats`; ``decode(content, label=...)`` returns
+    ``(samples, n_channels, rate, bits)``."""
+    import numpy as np
+
+    def row(aid, content):
+        samples, nch, rate, bits = decode(content, label=f"asset {aid}")
+        yield (
+            int(aid), fmt, int(nch), int(rate), int(bits),
+            int(samples.size // nch), int(samples.sum()),
+            int(np.abs(samples).max(initial=0)),
+        )
+
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
+        "asset_id bigint, format string, n_channels int, sample_rate int, "
+        "bit_depth int, n_samples bigint, sample_sum bigint, "
+        "sample_abs_max bigint",
     )
 
 
@@ -3051,40 +2825,7 @@ def aiff_decode_stats(assets: DataFrame) -> DataFrame:
     """REAL AIFF decode over Arrow batches with the same checksum row as
     :func:`wav_decode_stats` (format 'aiff') — a hash-match proves the
     big-endian stream, COMM dims, and the 80-bit rate all decoded."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import aiff_decode_pcm
-
-        for pdf in batches:
-            out = {
-                "asset_id": [], "format": [], "n_channels": [],
-                "sample_rate": [], "bit_depth": [], "n_samples": [],
-                "sample_sum": [], "sample_abs_max": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                samples, nch, rate, bits = aiff_decode_pcm(
-                    content, label=f"asset {aid}"
-                )
-                out["asset_id"].append(int(aid))
-                out["format"].append("aiff")
-                out["n_channels"].append(int(nch))
-                out["sample_rate"].append(int(rate))
-                out["bit_depth"].append(int(bits))
-                out["n_samples"].append(int(samples.size // nch))
-                out["sample_sum"].append(int(samples.sum()))
-                out["sample_abs_max"].append(int(np.abs(samples).max(initial=0)))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
-        "asset_id bigint, format string, n_channels int, sample_rate int, "
-        "bit_depth int, n_samples bigint, sample_sum bigint, "
-        "sample_abs_max bigint",
-    )
+    return _pcm_decode_stats(assets, "aiff", aiff_decode_pcm)
 
 
 # IMA/DVI ADPCM (round 11) — tables and recurrence from the public IMA
@@ -3365,28 +3106,12 @@ def encode_wav_depth_assets(
 ) -> DataFrame:
     """Arrow-batched multi-depth WAV encode: (id, n_samples, rate,
     bits 8|16|24|32) → (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import wav_encode_pcm_depth
+    def row(i, n, r, b):
+        yield (int(i), wav_encode_pcm_depth(int(i), int(n), int(r), int(b)))
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        wav_encode_pcm_depth(int(i), int(n), int(r), int(b))
-                        for i, n, r, b in zip(
-                            pdf[id_col], pdf[samples_col], pdf[rate_col],
-                            pdf[bits_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, samples_col, rate_col, bits_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, samples_col, rate_col, bits_col], row, _ENCODED_SCHEMA
     )
 
 
@@ -3399,28 +3124,12 @@ def encode_wav_adpcm_assets(
 ) -> DataFrame:
     """Arrow-batched ADPCM WAV encode: (id, n_samples, rate, codec
     'ima'|'ms') → (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import wav_encode_adpcm
+    def row(i, n, r, c):
+        yield (int(i), wav_encode_adpcm(int(i), int(n), int(r), str(c)))
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        wav_encode_adpcm(int(i), int(n), int(r), str(c))
-                        for i, n, r, c in zip(
-                            pdf[id_col], pdf[samples_col], pdf[rate_col],
-                            pdf[codec_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, samples_col, rate_col, codec_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, samples_col, rate_col, codec_col], row, _ENCODED_SCHEMA
     )
 
 
@@ -3431,45 +3140,7 @@ def wav_decode_stats(assets: DataFrame) -> DataFrame:
     can only come from decoding the int16 stream, so a hash-match against
     the closed-form oracle certifies the decoder (catalog
     ``multimodal_wav_roundtrip``)."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import wav_decode_pcm
-
-        for pdf in batches:
-            out = {
-                "asset_id": [],
-                "format": [],
-                "n_channels": [],
-                "sample_rate": [],
-                "bit_depth": [],
-                "n_samples": [],
-                "sample_sum": [],
-                "sample_abs_max": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                samples, nch, rate, bits = wav_decode_pcm(
-                    content, label=f"asset {aid}"
-                )
-                out["asset_id"].append(int(aid))
-                out["format"].append("wav")
-                out["n_channels"].append(int(nch))
-                out["sample_rate"].append(int(rate))
-                out["bit_depth"].append(int(bits))
-                out["n_samples"].append(int(samples.size // nch))
-                out["sample_sum"].append(int(samples.sum()))
-                out["sample_abs_max"].append(int(np.abs(samples).max(initial=0)))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
-        "asset_id bigint, format string, n_channels int, sample_rate int, "
-        "bit_depth int, n_samples bigint, sample_sum bigint, "
-        "sample_abs_max bigint",
-    )
+    return _pcm_decode_stats(assets, "wav", wav_decode_pcm)
 
 
 def encode_wav_assets(
@@ -3483,35 +3154,13 @@ def encode_wav_assets(
     [, channels]) → (id, content binary) — the audio member of the
     encode_*_assets family (same 100 TB shape: embarrassingly parallel,
     samples never cross a shuffle)."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    cols = [id_col, samples_col, rate_col]
-    if channels_col is not None:
-        cols.append(channels_col)
+    channels = F.lit(1) if channels_col is None else channels_col
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import wav_encode_pcm16
+    def row(i, n, r, c):
+        yield (int(i), wav_encode_pcm16(int(i), int(n), int(r), int(c)))
 
-        for pdf in batches:
-            ch = (
-                pdf[channels_col]
-                if channels_col is not None
-                else [1] * len(pdf)
-            )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        wav_encode_pcm16(int(i), int(n), int(r), int(c))
-                        for i, n, r, c in zip(
-                            pdf[id_col], pdf[samples_col], pdf[rate_col], ch
-                        )
-                    ],
-                }
-            )
-
-    return df.select(*cols).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, samples_col, rate_col, channels], row, _ENCODED_SCHEMA
     )
 
 
@@ -3846,28 +3495,12 @@ def encode_avi_rle8_assets(
 ) -> DataFrame:
     """Arrow-batched RLE8-AVI encode: (id, width, height, n_frames) →
     (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import avi_rle8_encode
+    def row(i, w, h, nf):
+        yield (int(i), avi_rle8_encode(int(i), int(w), int(h), int(nf)))
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        avi_rle8_encode(int(i), int(w), int(h), int(nf))
-                        for i, w, h, nf in zip(
-                            pdf[id_col], pdf[width_col], pdf[height_col],
-                            pdf[frames_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, width_col, height_col, frames_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, width_col, height_col, frames_col], row, _ENCODED_SCHEMA
     )
 
 
@@ -3885,166 +3518,149 @@ def avi_frame_sample_stats(assets: DataFrame, every_k: int = 2) -> DataFrame:
     index + codec together (catalog ``multimodal_video_frame_sample``,
     ``multimodal_video_dib_frame_sample``). Other handlers (inter-frame
     codecs) and index mismatches raise loudly."""
-    spark = assets.sparkSession
-    _ship_package(spark)
+    import struct
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    import numpy as np
 
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            jpeg_decode_gray,
-            rle8_decode_frame,
-        )
-
-        for pdf in batches:
-            out = {
-                "asset_id": [],
-                "frame_no": [],
-                "width": [],
-                "height": [],
-                "pixel_sum": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                b = bytes(content)
-                if b[:4] != b"RIFF" or b[8:12] != b"AVI ":
-                    raise ValueError(f"asset {aid}: not a RIFF/AVI file")
-                i = 12
-                handler = None
-                declared_frames = None
-                movi_start = None
-                frames = []  # (offset_rel_movi, chunk_type, frame_bytes)
-                idx_entries = None
-                strf_body = None
-                while i + 8 <= len(b):
-                    cid = b[i : i + 4]
-                    (clen,) = struct.unpack("<I", b[i + 4 : i + 8])
-                    body = b[i + 8 : i + 8 + clen]
-                    if cid == b"LIST":
-                        kind = body[:4]
-                        if kind == b"hdrl":
-                            # walk sub-chunks for avih and strh
-                            j = 4
-                            while j + 8 <= len(body):
-                                scid = body[j : j + 4]
-                                (slen,) = struct.unpack("<I", body[j + 4 : j + 8])
-                                sbody = body[j + 8 : j + 8 + slen]
-                                if scid == b"avih":
-                                    declared_frames = struct.unpack(
-                                        "<I", sbody[16:20]
-                                    )[0]
-                                elif scid == b"LIST" and sbody[:4] == b"strl":
-                                    k = 4
-                                    while k + 8 <= len(sbody):
-                                        tcid = sbody[k : k + 4]
-                                        (tlen,) = struct.unpack(
-                                            "<I", sbody[k + 4 : k + 8]
-                                        )
-                                        if tcid == b"strh":
-                                            tb = sbody[k + 8 : k + 8 + tlen]
-                                            if tb[:4] == b"vids":
-                                                handler = tb[4:8]
-                                        elif tcid == b"strf":
-                                            strf_body = sbody[k + 8 : k + 8 + tlen]
-                                        k += 8 + tlen + (tlen & 1)
-                                j += 8 + slen + (slen & 1)
-                        elif kind == b"movi":
-                            movi_start = i + 8
-                            j = 4
-                            while j + 8 <= len(body):
-                                scid = body[j : j + 4]
-                                (slen,) = struct.unpack("<I", body[j + 4 : j + 8])
-                                if scid[2:4] in (b"dc", b"db"):
-                                    frames.append(
-                                        (j, scid[2:4], body[j + 8 : j + 8 + slen])
-                                    )
-                                j += 8 + slen + (slen & 1)
-                    elif cid == b"idx1":
-                        idx_entries = [
-                            (body[k : k + 4], *struct.unpack("<III", body[k + 4 : k + 16]))
-                            for k in range(0, len(body), 16)
-                        ]
-                    i += 8 + clen + (clen & 1)
-                if handler == b"MJPG":
-                    want_ct, mode = b"dc", "jpeg"
-                elif handler == b"DIB ":
-                    want_ct, mode = b"db", "dib"
-                elif handler in (b"MRLE", b"mrle"):
-                    want_ct, mode = b"dc", "rle8"
-                else:
-                    raise ValueError(
-                        f"asset {aid}: unsupported video handler {handler!r} "
-                        "(supported: MJPG, 'DIB ' uncompressed, MRLE/BI_RLE8; "
-                        "inter-frame codecs need an external library)"
-                    )
-                if movi_start is None or not frames:
-                    raise ValueError(f"asset {aid}: no movi frames")
-                if declared_frames is not None and declared_frames != len(frames):
-                    raise ValueError(
-                        f"asset {aid}: avih declares {declared_frames} frames, "
-                        f"movi holds {len(frames)}"
-                    )
-                if idx_entries is not None:
-                    if len(idx_entries) != len(frames):
-                        raise ValueError(f"asset {aid}: idx1 length mismatch")
-                    for (ckid, _fl, off, size), (real_off, ct, fr) in zip(
-                        idx_entries, frames
-                    ):
-                        if (
-                            ckid[2:4] != want_ct
-                            or ct != want_ct
-                            or off != real_off
-                            or size != len(fr)
-                        ):
-                            raise ValueError(f"asset {aid}: idx1 entry mismatch")
-                if mode in ("dib", "rle8"):
-                    if strf_body is None or len(strf_body) < 40:
-                        raise ValueError(f"asset {aid}: stream missing strf")
-                    (_bsz, bw_, bh_, _pl, bits, comp, _sz, _xp, _yp, used,
-                     _imp) = struct.unpack("<IiiHHIIiiII", strf_body[:40])
-                    want_comp = 0 if mode == "dib" else 1  # BI_RGB / BI_RLE8
-                    if comp != want_comp or bits != 8:
-                        raise ValueError(
-                            f"asset {aid}: 8-bit with biCompression "
-                            f"{want_comp} required for {mode} "
-                            f"(got compression {comp}, {bits}-bit)"
-                        )
-                    n_pal = used or 256
-                    pal = np.frombuffer(
-                        strf_body[40 : 40 + 4 * n_pal], dtype=np.uint8
-                    ).reshape(n_pal, 4)
-                    red = pal[:, 2]  # RGBQUAD is B,G,R,reserved
-                    stride = (bw_ + 3) // 4 * 4
-                for fno in range(0, len(frames), every_k):
-                    fr = frames[fno][2]
-                    if mode == "jpeg":
-                        px = jpeg_decode_gray(fr)
-                    elif mode == "rle8":
-                        idxs = rle8_decode_frame(
-                            fr, bw_, bh_, label=f"asset {aid} frame {fno}"
-                        )
-                        px = red[idxs.astype(np.int64)]
-                    else:
-                        if len(fr) != stride * bh_:
-                            raise ValueError(
-                                f"asset {aid}: DIB frame {fno} size mismatch"
+    def row(aid, content):
+        b = bytes(content)
+        if b[:4] != b"RIFF" or b[8:12] != b"AVI ":
+            raise ValueError(f"asset {aid}: not a RIFF/AVI file")
+        i = 12
+        handler = None
+        declared_frames = None
+        movi_start = None
+        frames = []  # (offset_rel_movi, chunk_type, frame_bytes)
+        idx_entries = None
+        strf_body = None
+        while i + 8 <= len(b):
+            cid = b[i : i + 4]
+            (clen,) = struct.unpack("<I", b[i + 4 : i + 8])
+            body = b[i + 8 : i + 8 + clen]
+            if cid == b"LIST":
+                kind = body[:4]
+                if kind == b"hdrl":
+                    # walk sub-chunks for avih and strh
+                    j = 4
+                    while j + 8 <= len(body):
+                        scid = body[j : j + 4]
+                        (slen,) = struct.unpack("<I", body[j + 4 : j + 8])
+                        sbody = body[j + 8 : j + 8 + slen]
+                        if scid == b"avih":
+                            declared_frames = struct.unpack(
+                                "<I", sbody[16:20]
+                            )[0]
+                        elif scid == b"LIST" and sbody[:4] == b"strl":
+                            k = 4
+                            while k + 8 <= len(sbody):
+                                tcid = sbody[k : k + 4]
+                                (tlen,) = struct.unpack(
+                                    "<I", sbody[k + 4 : k + 8]
+                                )
+                                if tcid == b"strh":
+                                    tb = sbody[k + 8 : k + 8 + tlen]
+                                    if tb[:4] == b"vids":
+                                        handler = tb[4:8]
+                                elif tcid == b"strf":
+                                    strf_body = sbody[k + 8 : k + 8 + tlen]
+                                k += 8 + tlen + (tlen & 1)
+                        j += 8 + slen + (slen & 1)
+                elif kind == b"movi":
+                    movi_start = i + 8
+                    j = 4
+                    while j + 8 <= len(body):
+                        scid = body[j : j + 4]
+                        (slen,) = struct.unpack("<I", body[j + 4 : j + 8])
+                        if scid[2:4] in (b"dc", b"db"):
+                            frames.append(
+                                (j, scid[2:4], body[j + 8 : j + 8 + slen])
                             )
-                        rows = np.frombuffer(fr, dtype=np.uint8).reshape(
-                            bh_, stride
-                        )
-                        # bottom-up rows, stride padding stripped, palette
-                        # red channel (grayscale-identity contract)
-                        px = red[rows[::-1, :bw_].astype(np.int64)]
-                    out["asset_id"].append(int(aid))
-                    out["frame_no"].append(int(fno))
-                    out["width"].append(int(px.shape[1]))
-                    out["height"].append(int(px.shape[0]))
-                    out["pixel_sum"].append(int(px.sum(dtype=np.int64)))
-            yield pd.DataFrame(out)
+                        j += 8 + slen + (slen & 1)
+            elif cid == b"idx1":
+                idx_entries = [
+                    (body[k : k + 4], *struct.unpack("<III", body[k + 4 : k + 16]))
+                    for k in range(0, len(body), 16)
+                ]
+            i += 8 + clen + (clen & 1)
+        if handler == b"MJPG":
+            want_ct, mode = b"dc", "jpeg"
+        elif handler == b"DIB ":
+            want_ct, mode = b"db", "dib"
+        elif handler in (b"MRLE", b"mrle"):
+            want_ct, mode = b"dc", "rle8"
+        else:
+            raise ValueError(
+                f"asset {aid}: unsupported video handler {handler!r} "
+                "(supported: MJPG, 'DIB ' uncompressed, MRLE/BI_RLE8; "
+                "inter-frame codecs need an external library)"
+            )
+        if movi_start is None or not frames:
+            raise ValueError(f"asset {aid}: no movi frames")
+        if declared_frames is not None and declared_frames != len(frames):
+            raise ValueError(
+                f"asset {aid}: avih declares {declared_frames} frames, "
+                f"movi holds {len(frames)}"
+            )
+        if idx_entries is not None:
+            if len(idx_entries) != len(frames):
+                raise ValueError(f"asset {aid}: idx1 length mismatch")
+            for (ckid, _fl, off, size), (real_off, ct, fr) in zip(
+                idx_entries, frames
+            ):
+                if (
+                    ckid[2:4] != want_ct
+                    or ct != want_ct
+                    or off != real_off
+                    or size != len(fr)
+                ):
+                    raise ValueError(f"asset {aid}: idx1 entry mismatch")
+        if mode in ("dib", "rle8"):
+            if strf_body is None or len(strf_body) < 40:
+                raise ValueError(f"asset {aid}: stream missing strf")
+            (_bsz, bw_, bh_, _pl, bits, comp, _sz, _xp, _yp, used,
+             _imp) = struct.unpack("<IiiHHIIiiII", strf_body[:40])
+            want_comp = 0 if mode == "dib" else 1  # BI_RGB / BI_RLE8
+            if comp != want_comp or bits != 8:
+                raise ValueError(
+                    f"asset {aid}: 8-bit with biCompression "
+                    f"{want_comp} required for {mode} "
+                    f"(got compression {comp}, {bits}-bit)"
+                )
+            n_pal = used or 256
+            pal = np.frombuffer(
+                strf_body[40 : 40 + 4 * n_pal], dtype=np.uint8
+            ).reshape(n_pal, 4)
+            red = pal[:, 2]  # RGBQUAD is B,G,R,reserved
+            stride = (bw_ + 3) // 4 * 4
+        for fno in range(0, len(frames), every_k):
+            fr = frames[fno][2]
+            if mode == "jpeg":
+                px = jpeg_decode_gray(fr)
+            elif mode == "rle8":
+                idxs = rle8_decode_frame(
+                    fr, bw_, bh_, label=f"asset {aid} frame {fno}"
+                )
+                px = red[idxs.astype(np.int64)]
+            else:
+                if len(fr) != stride * bh_:
+                    raise ValueError(
+                        f"asset {aid}: DIB frame {fno} size mismatch"
+                    )
+                rows = np.frombuffer(fr, dtype=np.uint8).reshape(
+                    bh_, stride
+                )
+                # bottom-up rows, stride padding stripped, palette
+                # red channel (grayscale-identity contract)
+                px = red[rows[::-1, :bw_].astype(np.int64)]
+            yield (
+                int(aid), int(fno), int(px.shape[1]), int(px.shape[0]),
+                int(px.sum(dtype=np.int64)),
+            )
 
-    return assets.mapInPandas(
-        gen,
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
         "asset_id bigint, frame_no int, width int, height int, "
         "pixel_sum bigint",
     )
@@ -4060,30 +3676,12 @@ def encode_avi_assets(
     """Arrow-batched REAL AVI/MJPEG encode: (id, width, height,
     n_frames) → (id, content binary) — the video member of the
     encode_*_assets family."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import avi_mjpeg_encode
+    def row(i, w, h, nf):
+        yield (int(i), avi_mjpeg_encode(int(i), int(w), int(h), int(nf)))
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        avi_mjpeg_encode(int(i), int(w), int(h), int(nf))
-                        for i, w, h, nf in zip(
-                            pdf[id_col],
-                            pdf[width_col],
-                            pdf[height_col],
-                            pdf[frames_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, width_col, height_col, frames_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, width_col, height_col, frames_col], row, _ENCODED_SCHEMA
     )
 
 
@@ -4098,30 +3696,12 @@ def encode_avi_dib_assets(
     height, n_frames) → (id, content binary) through
     :func:`avi_dib_encode` — the raw-video sibling of
     :func:`encode_avi_assets`."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import avi_dib_encode
+    def row(i, w, h, nf):
+        yield (int(i), avi_dib_encode(int(i), int(w), int(h), int(nf)))
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        avi_dib_encode(int(i), int(w), int(h), int(nf))
-                        for i, w, h, nf in zip(
-                            pdf[id_col],
-                            pdf[width_col],
-                            pdf[height_col],
-                            pdf[frames_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, width_col, height_col, frames_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, width_col, height_col, frames_col], row, _ENCODED_SCHEMA
     )
 
 
@@ -4214,64 +3794,51 @@ def audio_pcm_features(assets: DataFrame) -> DataFrame:
     hash gate (catalog ``multimodal_audio_features``) certifies decode +
     deinterleave + the feature math together. Arrow-batched mapInPandas;
     features, not samples, cross the shuffle."""
-    spark = assets.sparkSession
-    _ship_package(spark)
+    import struct
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    import numpy as np
 
-        import numpy as np
+    def row(aid, content):
+        b = bytes(content)
+        if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+            raise ValueError(f"asset {aid}: not a RIFF/WAVE file")
+        i = 12
+        fmt = None
+        data = None
+        while i + 8 <= len(b):
+            cid = b[i : i + 4]
+            (clen,) = struct.unpack("<I", b[i + 4 : i + 8])
+            body = b[i + 8 : i + 8 + clen]
+            if cid == b"fmt ":
+                fmt = struct.unpack("<HHIIHH", body[:16])
+            elif cid == b"data":
+                data = body
+            i += 8 + clen + (clen & 1)
+        if fmt is None or data is None:
+            raise ValueError(f"asset {aid}: missing fmt or data chunk")
+        tag, nch, rate, _br, _al, bits = fmt
+        if tag != 1 or bits != 16:
+            raise ValueError(f"asset {aid}: only 16-bit PCM supported")
+        s = np.frombuffer(data, dtype="<i2").astype(np.int64)
+        frames = s.reshape(-1, nch)
+        n = frames.shape[0]
+        prod = frames[:-1, :] * frames[1:, :] if n > 1 else frames[:0, :]
+        yield (
+            int(aid),
+            int(nch),
+            int(n),
+            # exact integer microseconds: no float rounding to
+            # disagree across engines at half points
+            n * 1_000_000 // rate,
+            round(float(np.sqrt((s * s).sum() / s.size)), 6),
+            int((prod < 0).sum()),
+            int(np.abs(s).max(initial=0)),
+        )
 
-        for pdf in batches:
-            out = {
-                "asset_id": [],
-                "n_channels": [],
-                "n_samples": [],
-                "duration_us": [],
-                "rms": [],
-                "zero_crossings": [],
-                "peak": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                b = bytes(content)
-                if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                    raise ValueError(f"asset {aid}: not a RIFF/WAVE file")
-                i = 12
-                fmt = None
-                data = None
-                while i + 8 <= len(b):
-                    cid = b[i : i + 4]
-                    (clen,) = struct.unpack("<I", b[i + 4 : i + 8])
-                    body = b[i + 8 : i + 8 + clen]
-                    if cid == b"fmt ":
-                        fmt = struct.unpack("<HHIIHH", body[:16])
-                    elif cid == b"data":
-                        data = body
-                    i += 8 + clen + (clen & 1)
-                if fmt is None or data is None:
-                    raise ValueError(f"asset {aid}: missing fmt or data chunk")
-                tag, nch, rate, _br, _al, bits = fmt
-                if tag != 1 or bits != 16:
-                    raise ValueError(f"asset {aid}: only 16-bit PCM supported")
-                s = np.frombuffer(data, dtype="<i2").astype(np.int64)
-                frames = s.reshape(-1, nch)
-                n = frames.shape[0]
-                prod = frames[:-1, :] * frames[1:, :] if n > 1 else frames[:0, :]
-                out["asset_id"].append(int(aid))
-                out["n_channels"].append(int(nch))
-                out["n_samples"].append(int(n))
-                # exact integer microseconds: no float rounding to
-                # disagree across engines at half points
-                out["duration_us"].append(n * 1_000_000 // rate)
-                out["rms"].append(
-                    round(float(np.sqrt((s * s).sum() / s.size)), 6)
-                )
-                out["zero_crossings"].append(int((prod < 0).sum()))
-                out["peak"].append(int(np.abs(s).max(initial=0)))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
         "asset_id bigint, n_channels int, n_samples bigint, "
         "duration_us bigint, rms double, zero_crossings bigint, peak bigint",
     )
@@ -4484,58 +4051,8 @@ def png_decode_gray(content: bytes):
 def gif_decode_gray(content: bytes):
     """Decode the first frame of a GIF to grayscale via the palette's
     RED channel — the standalone form of :func:`gif_decode_stats`."""
-    import struct
-
-    import numpy as np
-
-    b = bytes(content)
-    if b[:6] not in (b"GIF87a", b"GIF89a") or len(b) < 13:
-        raise ValueError("not a GIF")
-    _sw, _sh, packed, _bg, _ar = struct.unpack("<HHBBB", b[6:13])
-    i = 13
-    palette = None
-    if packed & 0x80:
-        gct_n = 2 << (packed & 0x7)
-        palette = np.frombuffer(b[i : i + 3 * gct_n], dtype=np.uint8).reshape(
-            gct_n, 3
-        )
-        i += 3 * gct_n
-    while i < len(b):
-        blk = b[i]
-        i += 1
-        if blk == 0x21:
-            i += 1
-            while b[i]:
-                i += 1 + b[i]
-            i += 1
-            continue
-        if blk != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{blk:02x}")
-        _l, _t, w, h, ipk = struct.unpack("<HHHHB", b[i : i + 9])
-        i += 9
-        if ipk & 0x80:
-            lct_n = 2 << (ipk & 0x7)
-            palette = np.frombuffer(
-                b[i : i + 3 * lct_n], dtype=np.uint8
-            ).reshape(lct_n, 3)
-            i += 3 * lct_n
-        if palette is None:
-            raise ValueError("GIF has no color table")
-        mcs = b[i]
-        i += 1
-        lzw = bytearray()
-        while b[i]:
-            ln = b[i]
-            lzw += b[i + 1 : i + 1 + ln]
-            i += 1 + ln
-        idx = np.frombuffer(
-            bytes(_gif_lzw_decode(bytes(lzw), mcs)), dtype=np.uint8
-        )
-        stored = idx.reshape(h, w)
-        grid = np.empty_like(stored)
-        grid[_gif_row_order(h, bool(ipk & 0x40)), :] = stored
-        return palette[:, 0][grid]
-    raise ValueError("truncated GIF")
+    _depth, palette, grid = _gif_first_frame(bytes(content), "asset")
+    return palette[:, 0][grid]
 
 
 def gif_encode_animation(
@@ -4706,28 +4223,12 @@ def encode_gif_animation_assets(
 ) -> DataFrame:
     """Arrow-batched animated-GIF encode: (id, width, height, n_frames)
     → (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import gif_encode_animation
+    def row(i, w, h, nf):
+        yield (int(i), gif_encode_animation(int(i), int(w), int(h), int(nf)))
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        gif_encode_animation(int(i), int(w), int(h), int(nf))
-                        for i, w, h, nf in zip(
-                            pdf[id_col], pdf[width_col], pdf[height_col],
-                            pdf[frames_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, width_col, height_col, frames_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, width_col, height_col, frames_col], row, _ENCODED_SCHEMA
     )
 
 
@@ -4736,32 +4237,21 @@ def gif_animation_frame_stats(assets: DataFrame) -> DataFrame:
     COMPOSITED frame (asset_id, frame_no, width, height, pixel_sum) —
     the GIF sibling of avi_frame_sample_stats (catalog
     ``multimodal_gif_animation_frames``)."""
-    spark = assets.sparkSession
-    _ship_package(spark)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(aid, content):
+        for fno, canvas in enumerate(
+            gif_decode_frames(content, label=f"asset {aid}")
+        ):
+            yield (
+                int(aid), int(fno), int(canvas.shape[1]),
+                int(canvas.shape[0]), int(canvas.sum(dtype=np.int64)),
+            )
 
-        from pipes_spark.operators.multimodal import gif_decode_frames
-
-        for pdf in batches:
-            out = {
-                "asset_id": [], "frame_no": [], "width": [], "height": [],
-                "pixel_sum": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                for fno, canvas in enumerate(
-                    gif_decode_frames(content, label=f"asset {aid}")
-                ):
-                    out["asset_id"].append(int(aid))
-                    out["frame_no"].append(int(fno))
-                    out["width"].append(int(canvas.shape[1]))
-                    out["height"].append(int(canvas.shape[0]))
-                    out["pixel_sum"].append(int(canvas.sum(dtype=np.int64)))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
         "asset_id bigint, frame_no int, width int, height int, "
         "pixel_sum bigint",
     )
@@ -4903,29 +4393,31 @@ def encode_bmp_assets(
 ) -> DataFrame:
     """Arrow-batched BMP encode: (id, width, height, bpp 8|24, topdown
     bool) → (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import bmp_encode
+    def row(i, w, h, p, t):
+        yield (int(i), bmp_encode(int(i), int(w), int(h), int(p), bool(t)))
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        bmp_encode(int(i), int(w), int(h), int(p), bool(t))
-                        for i, w, h, p, t in zip(
-                            pdf[id_col], pdf[width_col], pdf[height_col],
-                            pdf[bpp_col], pdf[topdown_col],
-                        )
-                    ],
-                }
-            )
+    return _map_assets(
+        df,
+        [id_col, width_col, height_col, bpp_col, topdown_col],
+        row,
+        _ENCODED_SCHEMA,
+    )
 
-    return df.select(
-        id_col, width_col, height_col, bpp_col, topdown_col
-    ).mapInPandas(gen, "asset_id bigint, content binary")
+
+def _weighted_sum(px) -> int:
+    """Position-weighted checksum of an int64 (H, W) pixel array:
+    Σ px(y, x)·(y·W + x + 1) over the TOP-DOWN orientation, so every
+    pixel is pinned to its position."""
+    import numpy as np
+
+    hh, ww = px.shape
+    weights = (
+        np.arange(hh, dtype=np.int64)[:, None] * ww
+        + np.arange(ww, dtype=np.int64)[None, :]
+        + 1
+    )
+    return int((px * weights).sum())
 
 
 def bmp_decode_stats(assets: DataFrame) -> DataFrame:
@@ -4935,47 +4427,23 @@ def bmp_decode_stats(assets: DataFrame) -> DataFrame:
     TOP-DOWN orientation — bottom-up files must be flipped and strides
     skipped exactly for the weight grid to line up (catalog
     ``multimodal_bmp_roundtrip``)."""
-    spark = assets.sparkSession
-    _ship_package(spark)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            bmp_decode_gray,
-            sniff_image_header,
+    def row(aid, content):
+        fmt, w, h, bpp, _ = sniff_image_header(bytes(content))
+        if fmt != "bmp":
+            raise ValueError(f"asset {aid}: expected BMP, got {fmt}")
+        px = bmp_decode_gray(bytes(content)).astype(np.int64)
+        hh, ww = px.shape
+        yield (
+            int(aid), "bmp", int(ww), int(hh), int(bpp), int(px.sum()),
+            _weighted_sum(px), int(px.min()), int(px.max()),
         )
 
-        for pdf in batches:
-            out = {
-                "asset_id": [], "format": [], "width": [], "height": [],
-                "bpp": [], "pixel_sum": [], "weighted_sum": [],
-                "px_min": [], "px_max": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                fmt, w, h, bpp, _ = sniff_image_header(bytes(content))
-                if fmt != "bmp":
-                    raise ValueError(f"asset {aid}: expected BMP, got {fmt}")
-                px = bmp_decode_gray(bytes(content)).astype(np.int64)
-                hh, ww = px.shape
-                weights = (
-                    np.arange(hh, dtype=np.int64)[:, None] * ww
-                    + np.arange(ww, dtype=np.int64)[None, :]
-                    + 1
-                )
-                out["asset_id"].append(int(aid))
-                out["format"].append("bmp")
-                out["width"].append(int(ww))
-                out["height"].append(int(hh))
-                out["bpp"].append(int(bpp))
-                out["pixel_sum"].append(int(px.sum()))
-                out["weighted_sum"].append(int((px * weights).sum()))
-                out["px_min"].append(int(px.min()))
-                out["px_max"].append(int(px.max()))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
         "asset_id bigint, format string, width int, height int, bpp int, "
         "pixel_sum bigint, weighted_sum bigint, px_min int, px_max int",
     )
@@ -5382,31 +4850,19 @@ def encode_tiff_assets(
 ) -> DataFrame:
     """Arrow-batched TIFF encode: (id, width, height, byte_order
     'II'|'MM', compression 1|32773, photometric 0|1) → (id, content)."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import tiff_encode_gray
+    def row(i, w, h, o, c, p):
+        yield (
+            int(i),
+            tiff_encode_gray(int(i), int(w), int(h), str(o), int(c), int(p)),
+        )
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        tiff_encode_gray(
-                            int(i), int(w), int(h), str(o), int(c), int(p)
-                        )
-                        for i, w, h, o, c, p in zip(
-                            pdf[id_col], pdf[width_col], pdf[height_col],
-                            pdf[order_col], pdf[comp_col], pdf[photo_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(
-        id_col, width_col, height_col, order_col, comp_col, photo_col
-    ).mapInPandas(gen, "asset_id bigint, content binary")
+    return _map_assets(
+        df,
+        [id_col, width_col, height_col, order_col, comp_col, photo_col],
+        row,
+        _ENCODED_SCHEMA,
+    )
 
 
 def tiff_decode_stats(assets: DataFrame) -> DataFrame:
@@ -5415,60 +4871,37 @@ def tiff_decode_stats(assets: DataFrame) -> DataFrame:
     byte_order, compression, photometric, width, height, pixel_sum,
     weighted_sum) — the weighted sum catches strip mis-assembly and a
     skipped WhiteIsZero inversion alike."""
-    spark = assets.sparkSession
-    _ship_package(spark)
+    import struct
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    import numpy as np
 
-        import numpy as np
+    def row(aid, content):
+        b = bytes(content)
+        e = "<" if b[:2] == b"II" else ">"
+        px = tiff_decode_gray(b, label=f"asset {aid}").astype(np.int64)
+        # re-read compression/photometric for the evidence row
+        (_, ifd_at) = struct.unpack(e + "HI", b[2:8])
+        (n_entries,) = struct.unpack(e + "H", b[ifd_at : ifd_at + 2])
+        comp = photo = 1
+        for i in range(n_entries):
+            at = ifd_at + 2 + i * 12
+            tag, typ, _cnt = struct.unpack(e + "HHI", b[at : at + 8])
+            if tag in (259, 262):
+                (val,) = struct.unpack(e + "H", b[at + 8 : at + 10])
+                if tag == 259:
+                    comp = val
+                else:
+                    photo = val
+        hh, ww = px.shape
+        yield (
+            int(aid), "tiff", b[:2].decode(), int(comp), int(photo),
+            int(ww), int(hh), int(px.sum()), _weighted_sum(px),
+        )
 
-        from pipes_spark.operators.multimodal import tiff_decode_gray
-
-        for pdf in batches:
-            out = {
-                "asset_id": [], "format": [], "byte_order": [],
-                "compression": [], "photometric": [], "width": [],
-                "height": [], "pixel_sum": [], "weighted_sum": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                b = bytes(content)
-                e = "<" if b[:2] == b"II" else ">"
-                px = tiff_decode_gray(b, label=f"asset {aid}").astype(
-                    np.int64
-                )
-                # re-read compression/photometric for the evidence row
-                (_, ifd_at) = struct.unpack(e + "HI", b[2:8])
-                (n_entries,) = struct.unpack(e + "H", b[ifd_at : ifd_at + 2])
-                comp = photo = 1
-                for i in range(n_entries):
-                    at = ifd_at + 2 + i * 12
-                    tag, typ, _cnt = struct.unpack(e + "HHI", b[at : at + 8])
-                    if tag in (259, 262):
-                        (val,) = struct.unpack(e + "H", b[at + 8 : at + 10])
-                        if tag == 259:
-                            comp = val
-                        else:
-                            photo = val
-                hh, ww = px.shape
-                weights = (
-                    np.arange(hh, dtype=np.int64)[:, None] * ww
-                    + np.arange(ww, dtype=np.int64)[None, :]
-                    + 1
-                )
-                out["asset_id"].append(int(aid))
-                out["format"].append("tiff")
-                out["byte_order"].append(b[:2].decode())
-                out["compression"].append(int(comp))
-                out["photometric"].append(int(photo))
-                out["width"].append(int(ww))
-                out["height"].append(int(hh))
-                out["pixel_sum"].append(int(px.sum()))
-                out["weighted_sum"].append(int((px * weights).sum()))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
         "asset_id bigint, format string, byte_order string, "
         "compression int, photometric int, width int, height int, "
         "pixel_sum bigint, weighted_sum bigint",
@@ -5684,6 +5117,16 @@ def _jpeg_decode_hierarchical(data: bytes):
     raise ValueError("no differential scan found in hierarchical stream")
 
 
+def _pixel_lattice(i, w, h):
+    """The standard per-pixel lattice of the lossless encoders: pixel
+    (y, x) of asset ``i`` is (7·i + 11·x + 13·y) % 256."""
+    import numpy as np
+
+    x = np.arange(int(w), dtype=np.int64)[None, :]
+    y = np.arange(int(h), dtype=np.int64)[:, None]
+    return ((int(i) * 7 + x * 11 + y * 13) % 256).astype(np.uint8)
+
+
 def encode_jpeg_hierarchical_assets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -5694,30 +5137,11 @@ def encode_jpeg_hierarchical_assets(
     width, height) → (id, content binary) over the standard per-pixel
     lattice (the differential-lossless top frame makes arbitrary
     content bit-exact)."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(i, w, h):
+        yield (int(i), jpeg_encode_hierarchical(_pixel_lattice(i, w, h)))
 
-        from pipes_spark.operators.multimodal import jpeg_encode_hierarchical
-
-        for pdf in batches:
-            content = []
-            for i, w, h in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col]
-            ):
-                x = np.arange(int(w), dtype=np.int64)[None, :]
-                y = np.arange(int(h), dtype=np.int64)[:, None]
-                px = ((int(i) * 7 + x * 11 + y * 13) % 256).astype(np.uint8)
-                content.append(jpeg_encode_hierarchical(px))
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": content}
-            )
-
-    return df.select(id_col, width_col, height_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
-    )
+    return _map_assets(df, [id_col, width_col, height_col], row, _ENCODED_SCHEMA)
 
 
 def encode_jpeg_lossless_assets(
@@ -5732,33 +5156,14 @@ def encode_jpeg_lossless_assets(
     height, predictor 1-7, point_transform) → (id, content binary),
     over the standard per-pixel lattice (lossless ⇒ arbitrary per-pixel
     content reconstructs exactly — no block-constant contract)."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(i, w, h, pr, pt):
+        px = _pixel_lattice(i, w, h)
+        yield (int(i), jpeg_encode_lossless(px, int(pr), int(pt)))
 
-        from pipes_spark.operators.multimodal import jpeg_encode_lossless
-
-        for pdf in batches:
-            content = []
-            for i, w, h, pr, pt in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col],
-                pdf[pred_col], pdf[pt_col],
-            ):
-                x = np.arange(int(w), dtype=np.int64)[None, :]
-                y = np.arange(int(h), dtype=np.int64)[:, None]
-                px = ((int(i) * 7 + x * 11 + y * 13) % 256).astype(np.uint8)
-                content.append(
-                    jpeg_encode_lossless(px, int(pr), int(pt))
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": content}
-            )
-
-    return df.select(
-        id_col, width_col, height_col, pred_col, pt_col
-    ).mapInPandas(gen, "asset_id bigint, content binary")
+    return _map_assets(
+        df, [id_col, width_col, height_col, pred_col, pt_col], row, _ENCODED_SCHEMA
+    )
 
 
 def image_decode_weighted_stats(assets: DataFrame) -> DataFrame:
@@ -5768,44 +5173,21 @@ def image_decode_weighted_stats(assets: DataFrame) -> DataFrame:
     output (asset_id, format, width, height, pixel_sum, weighted_sum,
     px_min, px_max). The weighted sum pins every pixel to its
     position, so a hash-pass proves exact per-pixel reconstruction."""
-    spark = assets.sparkSession
-    _ship_package(spark)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            decode_image_gray,
-            sniff_image_header,
+    def row(aid, content):
+        fmt, *_ = sniff_image_header(bytes(content))
+        px = decode_image_gray(bytes(content)).astype(np.int64)
+        hh, ww = px.shape
+        yield (
+            int(aid), str(fmt), int(ww), int(hh), int(px.sum()),
+            _weighted_sum(px), int(px.min()), int(px.max()),
         )
 
-        for pdf in batches:
-            out = {
-                "asset_id": [], "format": [], "width": [], "height": [],
-                "pixel_sum": [], "weighted_sum": [], "px_min": [],
-                "px_max": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                fmt, *_ = sniff_image_header(bytes(content))
-                px = decode_image_gray(bytes(content)).astype(np.int64)
-                hh, ww = px.shape
-                weights = (
-                    np.arange(hh, dtype=np.int64)[:, None] * ww
-                    + np.arange(ww, dtype=np.int64)[None, :]
-                    + 1
-                )
-                out["asset_id"].append(int(aid))
-                out["format"].append(str(fmt))
-                out["width"].append(int(ww))
-                out["height"].append(int(hh))
-                out["pixel_sum"].append(int(px.sum()))
-                out["weighted_sum"].append(int((px * weights).sum()))
-                out["px_min"].append(int(px.min()))
-                out["px_max"].append(int(px.max()))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
         "asset_id bigint, format string, width int, height int, "
         "pixel_sum bigint, weighted_sum bigint, px_min int, px_max int",
     )
@@ -6004,36 +5386,22 @@ def exif_metadata_rows(assets: DataFrame) -> DataFrame:
     tag_type, value) — pixels are never touched, which is the point:
     a 100 TB ingest scan reads headers, not images (catalog
     ``multimodal_exif_metadata``)."""
-    spark = assets.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import exif_extract
+    def row(aid, content):
+        # emit per-asset rows already in (ifd, tag_id) order — the
+        # catalog query's output order contract ("Exif" < "IFD0"
+        # in plain string order), so a range-sorted input needs no
+        # final orderBy over the extraction (same row multiset)
+        for ifd, tag, name, typ, val in sorted(
+            exif_extract(content, label=f"asset {aid}"),
+            key=lambda r: (r[0], r[1]),
+        ):
+            yield (int(aid), ifd, int(tag), name, typ, val)
 
-        for pdf in batches:
-            out = {
-                "asset_id": [], "ifd": [], "tag_id": [], "tag_name": [],
-                "tag_type": [], "value": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                # emit per-asset rows already in (ifd, tag_id) order — the
-                # catalog query's output order contract ("Exif" < "IFD0"
-                # in plain string order), so a range-sorted input needs no
-                # final orderBy over the extraction (same row multiset)
-                for ifd, tag, name, typ, val in sorted(
-                    exif_extract(content, label=f"asset {aid}"),
-                    key=lambda r: (r[0], r[1]),
-                ):
-                    out["asset_id"].append(int(aid))
-                    out["ifd"].append(ifd)
-                    out["tag_id"].append(int(tag))
-                    out["tag_name"].append(name)
-                    out["tag_type"].append(typ)
-                    out["value"].append(val)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
         "asset_id bigint, ifd string, tag_id int, tag_name string, "
         "tag_type string, value string",
     )
@@ -6046,52 +5414,34 @@ def encode_exif_jpeg_assets(
     an APP1 Exif segment holding a deterministic tag ladder (byte order
     by id parity — the extractor must honor 'MM' tag reads to
     reproduce the same value strings)."""
-    spark = df.sparkSession
-    _ship_package(spark)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            exif_app1_payload,
-            jpeg_encode_gray,
-            jpeg_with_exif,
+    def row(i):
+        i = int(i)
+        base = jpeg_encode_gray(
+            np.full((8, 8), i % 256, np.uint8)
+        )
+        tags0 = [
+            (271, 2, f"maker_{i % 5}"),
+            (272, 2, f"model_{i % 7}"),
+            (274, 3, [i % 8 + 1]),
+            (306, 2, f"2021:{i % 12 + 1:02d}:{i % 28 + 1:02d} "
+                     f"10:30:{i % 60:02d}"),
+            (282, 5, [(72 + (i % 4) * 72, 1)]),
+        ]
+        exif_tags = [
+            (33434, 5, [(1, 60 + i % 200)]),
+            (34855, 3, [100 * (1 + i % 8)]),
+            (40962, 4, [8]),
+            (40963, 4, [8]),
+        ]
+        order = "II" if i % 2 == 0 else "MM"
+        yield (
+            i,
+            jpeg_with_exif(base, exif_app1_payload(tags0, exif_tags, order)),
         )
 
-        for pdf in batches:
-            content = []
-            for i in pdf[id_col]:
-                i = int(i)
-                base = jpeg_encode_gray(
-                    np.full((8, 8), i % 256, np.uint8)
-                )
-                tags0 = [
-                    (271, 2, f"maker_{i % 5}"),
-                    (272, 2, f"model_{i % 7}"),
-                    (274, 3, [i % 8 + 1]),
-                    (306, 2, f"2021:{i % 12 + 1:02d}:{i % 28 + 1:02d} "
-                             f"10:30:{i % 60:02d}"),
-                    (282, 5, [(72 + (i % 4) * 72, 1)]),
-                ]
-                exif_tags = [
-                    (33434, 5, [(1, 60 + i % 200)]),
-                    (34855, 3, [100 * (1 + i % 8)]),
-                    (40962, 4, [8]),
-                    (40963, 4, [8]),
-                ]
-                order = "II" if i % 2 == 0 else "MM"
-                content.append(
-                    jpeg_with_exif(
-                        base, exif_app1_payload(tags0, exif_tags, order)
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": content}
-            )
-
-    return df.select(id_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
-    )
+    return _map_assets(df, [id_col], row, _ENCODED_SCHEMA)
 
 
 def encode_png_filtered_assets(
@@ -6105,31 +5455,17 @@ def encode_png_filtered_assets(
     """Arrow-batched general-profile PNG encode: (id, width, height,
     filter_mode '0'..'4'|'adaptive', interlaced bool) → (id, content)
     over the standard per-pixel lattice."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(i, w, h, m, il):
+        px = _pixel_lattice(i, w, h)
+        yield (int(i), png_encode_filtered(px, str(m), bool(il)))
 
-        from pipes_spark.operators.multimodal import png_encode_filtered
-
-        for pdf in batches:
-            content = []
-            for i, w, h, m, il in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col],
-                pdf[mode_col], pdf[interlace_col],
-            ):
-                x = np.arange(int(w), dtype=np.int64)[None, :]
-                y = np.arange(int(h), dtype=np.int64)[:, None]
-                px = ((int(i) * 7 + x * 11 + y * 13) % 256).astype(np.uint8)
-                content.append(png_encode_filtered(px, str(m), bool(il)))
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": content}
-            )
-
-    return df.select(
-        id_col, width_col, height_col, mode_col, interlace_col
-    ).mapInPandas(gen, "asset_id bigint, content binary")
+    return _map_assets(
+        df,
+        [id_col, width_col, height_col, mode_col, interlace_col],
+        row,
+        _ENCODED_SCHEMA,
+    )
 
 
 def _subtitle_ts_ms(ts: str, sep: str, label: str) -> int:
@@ -6228,31 +5564,15 @@ def subtitle_cue_rows(
     → one row per cue (asset_id, cue_no, start_ms, end_ms, duration_ms,
     cue_text) — the video-text alignment step of a multimodal training
     pipeline (catalog ``multimodal_subtitle_cues``)."""
-    spark = assets.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import subtitle_parse
+    def row(aid, text):
+        for no, s, e, t in subtitle_parse(str(text), label=f"asset {aid}"):
+            yield (int(aid), int(no), int(s), int(e), int(e - s), t)
 
-        for pdf in batches:
-            out = {
-                "asset_id": [], "cue_no": [], "start_ms": [], "end_ms": [],
-                "duration_ms": [], "cue_text": [],
-            }
-            for aid, text in zip(pdf[id_col], pdf[text_col]):
-                for no, s, e, t in subtitle_parse(
-                    str(text), label=f"asset {aid}"
-                ):
-                    out["asset_id"].append(int(aid))
-                    out["cue_no"].append(int(no))
-                    out["start_ms"].append(int(s))
-                    out["end_ms"].append(int(e))
-                    out["duration_ms"].append(int(e - s))
-                    out["cue_text"].append(t)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_assets(
+        assets,
+        [id_col, text_col],
+        row,
         "asset_id bigint, cue_no int, start_ms bigint, end_ms bigint, "
         "duration_ms bigint, cue_text string",
     )
@@ -6266,33 +5586,21 @@ def encode_subtitle_assets(
     (i % 3)·200 ms, text 'cue <id>_<i>'), rendered as SubRip for even
     ids and WebVTT (with a NOTE block and cue settings the parser must
     skip) for odd."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import srt_render, vtt_render
-
-        for pdf in batches:
-            content = []
-            for i, nc in zip(pdf[id_col], pdf[cues_col]):
-                i, nc = int(i), int(nc)
-                cues = [
-                    (
-                        i * 1000 + c * 2000,
-                        i * 1000 + c * 2000 + 1500 + (c % 3) * 200,
-                        f"cue {i}_{c}",
-                    )
-                    for c in range(nc)
-                ]
-                content.append(
-                    srt_render(cues) if i % 2 == 0 else vtt_render(cues)
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": content}
+    def row(i, nc):
+        i, nc = int(i), int(nc)
+        cues = [
+            (
+                i * 1000 + c * 2000,
+                i * 1000 + c * 2000 + 1500 + (c % 3) * 200,
+                f"cue {i}_{c}",
             )
+            for c in range(nc)
+        ]
+        yield (i, srt_render(cues) if i % 2 == 0 else vtt_render(cues))
 
-    return df.select(id_col, cues_col).mapInPandas(
-        gen, "asset_id bigint, content string"
+    return _map_assets(
+        df, [id_col, cues_col], row, "asset_id bigint, content string"
     )
 
 
@@ -6309,48 +5617,36 @@ def image_ahash(assets: DataFrame, grid: int = 8) -> DataFrame:
     row-major bit string. Returns (asset_id, format, ahash_bits string)
     — a string so the 64-bit pattern is engine-portable with no sign-bit
     arithmetic."""
-    spark = assets.sparkSession
-    _ship_package(spark)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    bit_chars = np.array(["0", "1"])
 
-        from pipes_spark.operators.multimodal import (
-            decode_image_gray,
-            sniff_image_header,
-        )
+    def pool(px):
+        # whole-image block means via two reduceat passes (r12,
+        # guide §4.2: 2 vectorized calls replace grid² python-loop
+        # .mean() slices). Boundaries ⌊r·h/g⌋ match the old slices
+        # exactly; pixel values are small integers, so the float64
+        # block sums are exact in any summation order — bit-identical
+        # cells.
+        h, w = px.shape
+        rb = np.arange(grid) * h // grid
+        cb = np.arange(grid) * w // grid
+        sums = np.add.reduceat(np.add.reduceat(px, rb, axis=0), cb, axis=1)
+        counts = np.outer(np.diff(np.append(rb, h)), np.diff(np.append(cb, w)))
+        return sums / counts
 
-        bit_chars = np.array(["0", "1"])
+    def row(aid, content):
+        b = bytes(content)
+        fmt, *_ = sniff_image_header(b)
+        cells = pool(decode_image_gray(b).astype(np.float64))
+        bits = "".join(bit_chars[(cells.ravel() > cells.mean()).astype(np.intp)])
+        yield (int(aid), fmt, bits)
 
-        def pool(px):
-            # whole-image block means via two reduceat passes (r12,
-            # guide §4.2: 2 vectorized calls replace grid² python-loop
-            # .mean() slices). Boundaries ⌊r·h/g⌋ match the old slices
-            # exactly; pixel values are small integers, so the float64
-            # block sums are exact in any summation order — bit-identical
-            # cells.
-            h, w = px.shape
-            rb = np.arange(grid) * h // grid
-            cb = np.arange(grid) * w // grid
-            sums = np.add.reduceat(np.add.reduceat(px, rb, axis=0), cb, axis=1)
-            counts = np.outer(np.diff(np.append(rb, h)), np.diff(np.append(cb, w)))
-            return sums / counts
-
-        for pdf in batches:
-            out = {"asset_id": [], "format": [], "ahash_bits": []}
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                b = bytes(content)
-                fmt, *_ = sniff_image_header(b)
-                px = decode_image_gray(b).astype(np.float64)
-                cells = pool(px)
-                bits = "".join(bit_chars[(cells.ravel() > cells.mean()).astype(np.intp)])
-                out["asset_id"].append(int(aid))
-                out["format"].append(fmt)
-                out["ahash_bits"].append(bits)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen, "asset_id bigint, format string, ahash_bits string"
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
+        "asset_id bigint, format string, ahash_bits string",
     )
 
 
@@ -6372,36 +5668,13 @@ def encode_image_assets(
     streams. ``seed_col`` decouples the content seed from the asset id so
     near-duplicate pairs can be PLANTED (two ids sharing a seed get
     identical pixels under different codecs — the phash-pairs gate)."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    seed_col = seed_col or id_col
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import (
-            block_gray_lattice,
-            encode_pixels,
-        )
+    def row(i, w, h, codec, s):
+        px = block_gray_lattice(int(s), int(w), int(h), seed_mul, cell_mul)
+        yield (int(i), encode_pixels(px, str(codec)))
 
-        for pdf in batches:
-            blobs = []
-            for s, w, h, codec in zip(
-                pdf[seed_col], pdf[width_col], pdf[height_col], pdf[codec_col]
-            ):
-                px = block_gray_lattice(
-                    int(s), int(w), int(h), seed_mul, cell_mul
-                )
-                blobs.append(encode_pixels(px, str(codec)))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": blobs,
-                }
-            )
-
-    cols = [id_col, width_col, height_col, codec_col]
-    if seed_col != id_col:
-        cols.append(seed_col)
-    return df.select(*cols).mapInPandas(gen, "asset_id bigint, content binary")
+    cols = [id_col, width_col, height_col, codec_col, seed_col or id_col]
+    return _map_assets(df, cols, row, _ENCODED_SCHEMA)
 
 
 def png_encode_array(px) -> bytes:
@@ -6481,34 +5754,18 @@ def encode_pixel_assets(
     The fixture generator behind the real-mode phash gate (catalog
     ``multimodal_phash_pairs``); the oracle recomputes the same lattice
     closed-form."""
-    spark = df.sparkSession
-    _ship_package(spark)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import encode_pixels
-
+    def row(i, s, dlt, codec):
         p = np.arange(width * height, dtype=np.int64)
         hits = (p % hit_mod == 0).astype(np.int64)
-        for pdf in batches:
-            blobs = []
-            for s, dlt, codec in zip(
-                pdf[seed_col], pdf[delta_col], pdf[codec_col]
-            ):
-                mul = pos_mul + 2 * (int(s) % 13)
-                v = (int(s) * seed_mul + p * mul + int(dlt) * hits) % 256
-                px = v.astype(np.uint8).reshape(height, width)
-                blobs.append(encode_pixels(px, str(codec)))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": blobs,
-                }
-            )
+        mul = pos_mul + 2 * (int(s) % 13)
+        v = (int(s) * seed_mul + p * mul + int(dlt) * hits) % 256
+        px = v.astype(np.uint8).reshape(height, width)
+        yield (int(i), encode_pixels(px, str(codec)))
 
-    return df.select(id_col, seed_col, delta_col, codec_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, seed_col, delta_col, codec_col], row, _ENCODED_SCHEMA
     )
 
 
@@ -6685,31 +5942,15 @@ def encode_jpeg_color_assets(
     lattice, so Cb = Cr = 128 exactly and the lossy pipeline is
     bit-exact): (id, width, height, subsample '420'|'444') →
     (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(i, w, h, sub):
+        gray = jpeg_block_gray(int(i), int(w), int(h))
+        rgb = np.stack([gray] * 3, axis=2)
+        yield (int(i), jpeg_encode_color(rgb, str(sub)))
 
-        from pipes_spark.operators.multimodal import (
-            jpeg_block_gray,
-            jpeg_encode_color,
-        )
-
-        for pdf in batches:
-            blobs = []
-            for i, w, h, sub in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col], pdf[subsample_col]
-            ):
-                gray = jpeg_block_gray(int(i), int(w), int(h))
-                rgb = np.stack([gray] * 3, axis=2)
-                blobs.append(jpeg_encode_color(rgb, str(sub)))
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": blobs}
-            )
-
-    return df.select(id_col, width_col, height_col, subsample_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, width_col, height_col, subsample_col], row, _ENCODED_SCHEMA
     )
 
 
@@ -6720,46 +5961,25 @@ def jpeg_color_decode_stats(assets: DataFrame) -> DataFrame:
     width, height, n_components, n_pixels, pixel_sum). A hash-match
     against the closed-form oracle certifies the color pipeline
     end to end (catalog ``multimodal_jpeg_color_roundtrip``)."""
-    spark = assets.sparkSession
-    _ship_package(spark)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            jpeg_decode,
-            sniff_image_header,
+    def row(aid, content):
+        b = bytes(content)
+        fmt, _w, _h, _d, ncomp = sniff_image_header(b)
+        if fmt != "jpeg":
+            raise ValueError(f"asset {aid}: not a JPEG")
+        px = jpeg_decode(b)
+        if px.ndim != 3:
+            raise ValueError(f"asset {aid}: expected a color JPEG")
+        yield (
+            int(aid), fmt, int(px.shape[1]), int(px.shape[0]), int(ncomp),
+            int(px.shape[0] * px.shape[1]), int(px.sum(dtype=np.int64)),
         )
 
-        for pdf in batches:
-            out = {
-                "asset_id": [],
-                "format": [],
-                "width": [],
-                "height": [],
-                "n_components": [],
-                "n_pixels": [],
-                "pixel_sum": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                b = bytes(content)
-                fmt, _w, _h, _d, ncomp = sniff_image_header(b)
-                if fmt != "jpeg":
-                    raise ValueError(f"asset {aid}: not a JPEG")
-                px = jpeg_decode(b)
-                if px.ndim != 3:
-                    raise ValueError(f"asset {aid}: expected a color JPEG")
-                out["asset_id"].append(int(aid))
-                out["format"].append(fmt)
-                out["width"].append(int(px.shape[1]))
-                out["height"].append(int(px.shape[0]))
-                out["n_components"].append(int(ncomp))
-                out["n_pixels"].append(int(px.shape[0] * px.shape[1]))
-                out["pixel_sum"].append(int(px.sum(dtype=np.int64)))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
         "asset_id bigint, format string, width int, height int, "
         "n_components int, n_pixels bigint, pixel_sum bigint",
     )
@@ -7209,36 +6429,15 @@ def encode_jpeg_progressive_assets(
     9-scan split-band successive-approximation ladder; default is the
     4-scan script — so BOTH real-world script shapes run under the
     gate."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    cols = [id_col, width_col, height_col]
-    if deep_col is not None:
-        cols.append(deep_col)
+    deep = F.lit(False) if deep_col is None else deep_col
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import (
-            _JPEG_PROG_DEEP_SCANS,
-            jpeg_block_gray,
-            jpeg_encode_progressive,
-        )
+    def row(i, w, h, d):
+        px = jpeg_block_gray(int(i), int(w), int(h))
+        kw = {"scans": _JPEG_PROG_DEEP_SCANS} if bool(d) else {}
+        yield (int(i), jpeg_encode_progressive(px, **kw))
 
-        for pdf in batches:
-            deep = (
-                pdf[deep_col] if deep_col is not None else [False] * len(pdf)
-            )
-            blobs = []
-            for i, w, h, d in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col], deep
-            ):
-                px = jpeg_block_gray(int(i), int(w), int(h))
-                kw = {"scans": _JPEG_PROG_DEEP_SCANS} if bool(d) else {}
-                blobs.append(jpeg_encode_progressive(px, **kw))
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": blobs}
-            )
-
-    return df.select(*cols).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, width_col, height_col, deep], row, _ENCODED_SCHEMA
     )
 
 
@@ -7269,44 +6468,21 @@ def encode_jpeg_progressive_color_assets(
     bit-exact lossy pipeline): (id, width, height, subsample
     '420'|'422'|'444'[, deep]) → (id, content binary). ``deep_col``
     switches those images to the 15-scan split-band ladder."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    cols = [id_col, width_col, height_col, subsample_col]
-    if deep_col is not None:
-        cols.append(deep_col)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    deep = F.lit(False) if deep_col is None else deep_col
 
-        from pipes_spark.operators.multimodal import (
-            _JPEG_PROG_COLOR_DEEP_SCANS,
-            jpeg_block_gray,
-            jpeg_encode_progressive_color,
-        )
+    def row(i, w, h, sub, d):
+        gray = jpeg_block_gray(int(i), int(w), int(h))
+        rgb = np.stack([gray] * 3, axis=2)
+        kw = {"scans": _JPEG_PROG_COLOR_DEEP_SCANS} if bool(d) else {}
+        yield (int(i), jpeg_encode_progressive_color(rgb, str(sub), **kw))
 
-        for pdf in batches:
-            deep = (
-                pdf[deep_col] if deep_col is not None else [False] * len(pdf)
-            )
-            blobs = []
-            for i, w, h, sub, d in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col],
-                pdf[subsample_col], deep,
-            ):
-                gray = jpeg_block_gray(int(i), int(w), int(h))
-                rgb = np.stack([gray] * 3, axis=2)
-                kw = (
-                    {"scans": _JPEG_PROG_COLOR_DEEP_SCANS} if bool(d) else {}
-                )
-                blobs.append(
-                    jpeg_encode_progressive_color(rgb, str(sub), **kw)
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": blobs}
-            )
-
-    return df.select(*cols).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df,
+        [id_col, width_col, height_col, subsample_col, deep],
+        row,
+        _ENCODED_SCHEMA,
     )
 
 
@@ -8079,49 +7255,21 @@ def encode_jpeg_arith_assets(
     band-split magnitude bins — both decoded back by the SAME
     :func:`jpeg_decode_stats` the Huffman modes use (dispatch via SOF9
     in :func:`jpeg_decode`). Pixels never cross a shuffle."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    cols = [id_col, width_col, height_col]
-    if restart_col is not None:
-        cols.append(restart_col)
-    if kx_col is not None:
-        cols.append(kx_col)
+    restart = F.lit(0) if restart_col is None else restart_col
+    kx = F.lit(5) if kx_col is None else kx_col
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import (
-            jpeg_block_gray,
-            jpeg_encode_arith,
+    def row(i, w, h, r, k):
+        yield (
+            int(i),
+            jpeg_encode_arith(
+                jpeg_block_gray(int(i), int(w), int(h)),
+                restart_interval=int(r),
+                ac_kx=int(k),
+            ),
         )
 
-        for pdf in batches:
-            ri = (
-                pdf[restart_col]
-                if restart_col is not None
-                else [0] * len(pdf)
-            )
-            kx = pdf[kx_col] if kx_col is not None else [5] * len(pdf)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        jpeg_encode_arith(
-                            jpeg_block_gray(int(i), int(w), int(h)),
-                            restart_interval=int(r),
-                            ac_kx=int(k),
-                        )
-                        for i, w, h, r, k in zip(
-                            pdf[id_col],
-                            pdf[width_col],
-                            pdf[height_col],
-                            ri,
-                            kx,
-                        )
-                    ],
-                }
-            )
-
-    return df.select(*cols).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, width_col, height_col, restart, kx], row, _ENCODED_SCHEMA
     )
 
 
@@ -9083,44 +8231,27 @@ def encode_flac_assets(
     stereo modes exercise all three decorrelation reconstructions and
     per-row block sizes exercise both table-coded and end-of-header
     block-size forms under the gate."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    cols = [id_col, n_samples_col, rate_col, channels_col]
-    if mode_col is not None:
-        cols.append(mode_col)
-    if block_col is not None:
-        cols.append(block_col)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    stereo = F.lit("independent") if mode_col is None else mode_col
+    block_size = F.lit(192) if block_col is None else block_col
 
-        from pipes_spark.operators.multimodal import flac_encode_pcm16
+    def row(i, ns, rate, ch, mode, bs):
+        n = int(ns) * int(ch)
+        sig = ((np.arange(n, dtype=np.int64) + int(i)) * 2557) % 65536 - 32768
+        yield (
+            int(i),
+            flac_encode_pcm16(
+                sig, int(rate), channels=int(ch),
+                block_size=int(bs), stereo_mode=str(mode),
+            ),
+        )
 
-        for pdf in batches:
-            modes = (
-                pdf[mode_col] if mode_col is not None
-                else ["independent"] * len(pdf)
-            )
-            blocks = pdf[block_col] if block_col is not None else [192] * len(pdf)
-            blobs = []
-            for i, ns, rate, ch, mode, bs in zip(
-                pdf[id_col], pdf[n_samples_col], pdf[rate_col],
-                pdf[channels_col], modes, blocks,
-            ):
-                n = int(ns) * int(ch)
-                sig = ((np.arange(n, dtype=np.int64) + int(i)) * 2557) % 65536 - 32768
-                blobs.append(
-                    flac_encode_pcm16(
-                        sig, int(rate), channels=int(ch),
-                        block_size=int(bs), stereo_mode=str(mode),
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": blobs}
-            )
-
-    return df.select(*cols).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df,
+        [id_col, n_samples_col, rate_col, channels_col, stereo, block_size],
+        row,
+        _ENCODED_SCHEMA,
     )
 
 
@@ -9133,37 +8264,22 @@ def flac_decode_stats(assets: DataFrame) -> DataFrame:
     sample_abs_max, md5_ok). A hash-match against the closed-form
     lattice oracle with md5_ok = TRUE certifies byte-exact lossless
     reconstruction — the strongest decode proof in the audio family."""
-    spark = assets.sparkSession
-    _ship_package(spark)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(aid, content):
+        samples, nch, rate, bps, total, md5_ok = flac_decode(
+            bytes(content), label=f"asset {aid}"
+        )
+        yield (
+            int(aid), "flac", int(nch), int(rate), int(bps), int(total),
+            int(samples.sum(dtype=np.int64)), int(np.abs(samples).max()),
+            bool(md5_ok),
+        )
 
-        from pipes_spark.operators.multimodal import flac_decode
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "asset_id", "format", "n_channels", "sample_rate",
-                "bit_depth", "n_samples", "sample_sum", "sample_abs_max",
-                "md5_ok",
-            )}
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                samples, nch, rate, bps, total, md5_ok = flac_decode(
-                    bytes(content), label=f"asset {aid}"
-                )
-                out["asset_id"].append(int(aid))
-                out["format"].append("flac")
-                out["n_channels"].append(int(nch))
-                out["sample_rate"].append(int(rate))
-                out["bit_depth"].append(int(bps))
-                out["n_samples"].append(int(total))
-                out["sample_sum"].append(int(samples.sum(dtype=np.int64)))
-                out["sample_abs_max"].append(int(np.abs(samples).max()))
-                out["md5_ok"].append(bool(md5_ok))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
         "asset_id bigint, format string, n_channels int, sample_rate int, "
         "bit_depth int, n_samples bigint, sample_sum bigint, "
         "sample_abs_max bigint, md5_ok boolean",
@@ -9400,35 +8516,13 @@ def encode_flv_screen_assets(
     """Arrow-batched REAL FLV/Screen-Video encode of the deterministic
     inter-frame lattice: (id, width, height, n_frames) → (id, content
     binary). Pixels never cross a shuffle."""
-    spark = df.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import (
-            flv_screen_block_frames,
-            flv_screen_encode,
-        )
+    def row(i, w, h, n):
+        frames = flv_screen_block_frames(int(i), int(w), int(h), int(n))
+        yield (int(i), flv_screen_encode(frames))
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        flv_screen_encode(
-                            flv_screen_block_frames(
-                                int(i), int(w), int(h), int(n)
-                            )
-                        )
-                        for i, w, h, n in zip(
-                            pdf[id_col], pdf[width_col], pdf[height_col],
-                            pdf[frames_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, width_col, height_col, frames_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _map_assets(
+        df, [id_col, width_col, height_col, frames_col], row, _ENCODED_SCHEMA
     )
 
 
@@ -9440,35 +8534,21 @@ def flv_screen_frame_stats(assets: DataFrame) -> DataFrame:
     only the changed block, every frame's sum can only be right if the
     canvas persisted every earlier update — the inter-frame contract
     the hash gate certifies."""
-    spark = assets.sparkSession
-    _ship_package(spark)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(aid, content):
+        for fno, (_ts, frame, updated) in enumerate(
+            flv_screen_decode(bytes(content), label=f"asset {aid}")
+        ):
+            yield (
+                int(aid), fno, int(frame.shape[1]), int(frame.shape[0]),
+                int(updated), int(frame[:, :, 0].sum(dtype=np.int64)),
+            )
 
-        from pipes_spark.operators.multimodal import flv_screen_decode
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "asset_id", "frame_no", "width", "height",
-                "n_blocks_updated", "pixel_sum",
-            )}
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                for fno, (_ts, frame, updated) in enumerate(
-                    flv_screen_decode(bytes(content), label=f"asset {aid}")
-                ):
-                    out["asset_id"].append(int(aid))
-                    out["frame_no"].append(fno)
-                    out["height"].append(int(frame.shape[0]))
-                    out["width"].append(int(frame.shape[1]))
-                    out["n_blocks_updated"].append(int(updated))
-                    out["pixel_sum"].append(
-                        int(frame[:, :, 0].sum(dtype=np.int64))
-                    )
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
         "asset_id bigint, frame_no int, width int, height int, "
         "n_blocks_updated int, pixel_sum bigint",
     )
@@ -9609,42 +8689,27 @@ def encode_flac_tagged_assets(
     """Arrow-batched FLAC encode with metadata: the lattice signal
     (mono, 16 kHz, block 192) plus per-doc Vorbis comments and a
     per-frame seek table: (id, n_samples) → (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
+    import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            flac_add_metadata,
-            flac_encode_pcm16,
+    def row(i, ns):
+        i, ns = int(i), int(ns)
+        sig = ((np.arange(ns, dtype=np.int64) + i) * 2557) % 65536 - 32768
+        raw = flac_encode_pcm16(sig, 16000, block_size=192)
+        yield (
+            i,
+            flac_add_metadata(
+                raw,
+                tags=[
+                    ("TITLE", f"doc_{i}"),
+                    ("ARTIST", f"artist_{i % 7}"),
+                    ("TRACKNUMBER", str(i % 12 + 1)),
+                ],
+                seek_every=1,
+                padding=16,
+            ),
         )
 
-        for pdf in batches:
-            blobs = []
-            for i, ns in zip(pdf[id_col], pdf[n_samples_col]):
-                i, ns = int(i), int(ns)
-                sig = ((np.arange(ns, dtype=np.int64) + i) * 2557) % 65536 - 32768
-                raw = flac_encode_pcm16(sig, 16000, block_size=192)
-                blobs.append(
-                    flac_add_metadata(
-                        raw,
-                        tags=[
-                            ("TITLE", f"doc_{i}"),
-                            ("ARTIST", f"artist_{i % 7}"),
-                            ("TRACKNUMBER", str(i % 12 + 1)),
-                        ],
-                        seek_every=1,
-                        padding=16,
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": blobs}
-            )
-
-    return df.select(id_col, n_samples_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
-    )
+    return _map_assets(df, [id_col, n_samples_col], row, _ENCODED_SCHEMA)
 
 
 def flac_metadata_rows(assets: DataFrame) -> DataFrame:
@@ -9657,45 +8722,33 @@ def flac_metadata_rows(assets: DataFrame) -> DataFrame:
     closed-form oracle); padding → its length. The decoded stream
     itself is additionally MD5-verified so the metadata splice is
     proven not to corrupt audio."""
-    spark = assets.sparkSession
-    _ship_package(spark)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import (
-            flac_decode,
-            flac_parse_metadata,
-        )
+    def row(aid, content):
+        b = bytes(content)
+        *_, md5_ok = flac_decode(b, label=f"asset {aid}")
+        if not md5_ok:
+            raise ValueError(f"asset {aid}: audio corrupted by splice")
+        rows = []
+        for entry in flac_parse_metadata(b, label=f"asset {aid}"):
+            if entry["type"] == "VORBIS_COMMENT":
+                rows.append(("VORBIS_COMMENT", "vendor", entry["vendor"]))
+                for k, v in entry["comments"]:
+                    rows.append(("VORBIS_COMMENT", k, v))
+            elif entry["type"] == "SEEKTABLE":
+                for i, (sn, _off, cnt) in enumerate(entry["points"]):
+                    rows.append(("SEEKTABLE", f"seekpoint_{i}",
+                                 f"{sn}/{cnt}"))
+            elif entry["type"] == "PADDING":
+                rows.append(("PADDING", "length", str(entry["length"])))
+        # emit per-asset rows in (block_type, item) string order —
+        # the catalog query's output order contract, so the
+        # range-sorted input needs no final orderBy (same multiset)
+        for bt, item, value in sorted(rows, key=lambda r: (r[0], r[1])):
+            yield (int(aid), bt, item, value)
 
-        for pdf in batches:
-            out = {k: [] for k in ("asset_id", "block_type", "item", "value")}
-
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                b = bytes(content)
-                *_, md5_ok = flac_decode(b, label=f"asset {aid}")
-                if not md5_ok:
-                    raise ValueError(f"asset {aid}: audio corrupted by splice")
-                rows = []
-                for entry in flac_parse_metadata(b, label=f"asset {aid}"):
-                    if entry["type"] == "VORBIS_COMMENT":
-                        rows.append(("VORBIS_COMMENT", "vendor", entry["vendor"]))
-                        for k, v in entry["comments"]:
-                            rows.append(("VORBIS_COMMENT", k, v))
-                    elif entry["type"] == "SEEKTABLE":
-                        for i, (sn, _off, cnt) in enumerate(entry["points"]):
-                            rows.append(("SEEKTABLE", f"seekpoint_{i}",
-                                         f"{sn}/{cnt}"))
-                    elif entry["type"] == "PADDING":
-                        rows.append(("PADDING", "length", str(entry["length"])))
-                # emit per-asset rows in (block_type, item) string order —
-                # the catalog query's output order contract, so the
-                # range-sorted input needs no final orderBy (same multiset)
-                for bt, item, value in sorted(rows, key=lambda r: (r[0], r[1])):
-                    out["asset_id"].append(int(aid))
-                    out["block_type"].append(bt)
-                    out["item"].append(item)
-                    out["value"].append(value)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen, "asset_id bigint, block_type string, item string, value string"
+    return _map_assets(
+        assets,
+        ["asset_id", "content"],
+        row,
+        "asset_id bigint, block_type string, item string, value string",
     )

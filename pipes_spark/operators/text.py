@@ -1506,7 +1506,7 @@ def positional_postings(
     One map-side posexplode — no shuffle; writing grouped per-token
     posting lists is the sink's bucketing choice, not this operator's.
     """
-    from .scale import ensure_min_partitions, src_bytes_hint
+    from .scale import ensure_min_partitions
 
     return (
         ensure_min_partitions(df).select(
