@@ -13,8 +13,13 @@ Design for scale:
 * n-gram Jaccard = exact verifier for candidate pairs (shingle-set overlap
   via a shingle-keyed self-join, prefix-limited to bound blowup).
 
-Everything below is built-in-only DataFrame code (no Python UDFs): xxhash64 /
-md5 / explode / groupBy — all codegen'd JVM-side.
+Everything below is built-in-only DataFrame code (no Python UDFs). xxhash64 /
+md5 / explode / groupBy are codegen'd JVM-side; shingling and a few
+verifiers (simhash votes, signature agreement) use higher-order functions
+(``transform``/``aggregate``/``zip_with``), which are CodegenFallback —
+interpreted per element. Shingles are cut from ONE tokenization per row
+(``text._with_tokens``), so that interpreted work stays linear in the
+document length.
 """
 
 from __future__ import annotations
@@ -26,18 +31,13 @@ from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
 from .scale import ensure_min_partitions, src_bytes_hint
-from .text import normalized_fingerprint, tokens
+from .text import _token_ngrams, normalized_fingerprint, tokens
 
 
 def word_shingles(col, n: int = 3) -> Column:
-    """n-word shingles as an array (distinct, order-preserving input)."""
-    toks = tokens(col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        )
-    )
+    """n-word shingles as an array (distinct, order-preserving input),
+    linear in the token count: the document is tokenized once per row."""
+    return F.array_distinct(_token_ngrams(col, n))
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -85,9 +85,11 @@ def minhash_signatures(
     seed material — integer-only work, never a second pass over the string.
 
     Shape: explode shingles to rows, then ONE hash-aggregate with
-    ``num_hashes`` ``min`` columns. Everything (xxhash64, min) is
-    whole-stage-codegen'd — no higher-order functions (those are
-    ``CodegenFallback``, i.e. interpreted per element, ~50× slower). The
+    ``num_hashes`` ``min`` columns. Only the shingling itself is a
+    higher-order function (``CodegenFallback``, interpreted per element,
+    linear in the token count since the document is tokenized once per
+    row); the per-hash work (xxhash64, min) is whole-stage-codegen'd over
+    exploded rows, never a per-element lambda over ``num_hashes``. The
     groupBy does map-side partial aggregation, so the shuffle carries just
     8·num_hashes bytes per document regardless of document size.
     """
@@ -109,9 +111,10 @@ def _minhash_wide(
         F.col(id_col), F.explode(word_shingles(text_col, shingle_n)).alias("_s")
     )
     hashed = ex.select(F.col(id_col), F.xxhash64("_s").alias("_h"))
-    mins = [
-        F.min(F.xxhash64(F.lit(i), F.col("_h"))).alias(f"_m{i}") for i in range(num_hashes)
-    ]
+    # one SQL string per aggregate: the same tree as
+    # F.min(F.xxhash64(F.lit(i), F.col("_h"))) (INT literal seed material,
+    # default xxhash64 seed) in one py4j round trip instead of ~5
+    mins = [F.expr(f"min(xxhash64({i}, _h)) AS _m{i}") for i in range(num_hashes)]
     return hashed.groupBy(id_col).agg(*mins)
 
 
@@ -355,27 +358,27 @@ def lsh_verified_pairs(
         .unionByName(cand.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    # candidate docs only. No forced broadcast: on duplicate-heavy corpora
-    # the candidate id set is O(corpus) and a broadcast hint would pin an
-    # unbounded driver collect — let AQE broadcast when it measures small
-    # and fall back to a shuffled semi-join when it isn't
+    # candidate docs only, through a PINNED broadcast semi-join: it keeps
+    # the scan's partitioning, which the src_bytes hint below relies on (a
+    # shuffled semi would leave shuffle-partition count instead and the
+    # estimate would drive a redundant repartition). The broadcast payload
+    # is 8 bytes per candidate doc — on duplicate-heavy corpora that is
+    # O(corpus) ids, the bound this pin accepts.
     # per-candidate-doc hash array + shingle count in ONE aggregate; the
     # persist sits here (not on the shingle rows) because the two
     # pair-side joins below alias the columns differently, which defeats
     # broadcast-exchange reuse — InMemoryRelation computes the aggregate
     # once for both sides
     arrs = scoped_persist(
-        # ensure_min_partitions INSIDE the semi-join (r12): the broadcast
-        # semi preserves the scan's partitioning, so on single-row-group
-        # inputs the interpreted shingle transform below serialized on ONE
-        # task (the CLAUDE.md CPU-heavy-operator rule; A/B at sf0.1:
-        # full-corpus arrs 3.24 s one-task vs 0.47 s spread — and spread,
-        # the flat-HOF shape beats a lead-window restructure 0.47 vs 0.59)
+        # ensure_min_partitions INSIDE the semi-join: the broadcast semi
+        # preserves the scan's partitioning, so on single-row-group inputs
+        # the interpreted shingle transform below would run on ONE task
+        # (the CLAUDE.md CPU-heavy-operator rule; full-corpus arrs at sf0.1,
+        # 4 cores, warm min: 0.58 s one task vs 0.40 s spread)
         ensure_min_partitions(
-            df.join(ids, df[id_col] == ids["id"], "left_semi"),
-            # broadcast semi preserves the scan's partitioning, so the
-            # scan's byte-size hint stays the exact split count (r12:
-            # skips the df.rdd probe, 0.35 s of throwaway planning here)
+            df.join(F.broadcast(ids), df[id_col] == ids["id"], "left_semi"),
+            # so the scan's byte-size hint stays the exact split count
+            # (skips the df.rdd probe, 0.35 s of throwaway planning here)
             src_bytes=src_bytes_hint(df),
         )
         .select(

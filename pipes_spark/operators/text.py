@@ -34,6 +34,36 @@ def tokens(col) -> Column:
     return F.filter(F.split(c, r"\s+"), lambda t: t != "")
 
 
+def _with_tokens(col, fn) -> Column:
+    """``fn(toks)`` over ``col``'s token array, tokenizing ONCE per row.
+
+    A lambda that references an outer non-attribute expression gets that
+    expression inlined into its body, so ``slice(tokens(c), i + 1, n)``
+    inside ``transform`` re-splits the document for every element —
+    O(tokens²) per row. Routing the array through a one-element
+    ``transform(array(tokens), fn)[0]`` makes it a lambda VARIABLE instead:
+    evaluated once, shared by every reference in ``fn``."""
+    return F.transform(F.array(tokens(col)), fn)[0]
+
+
+def _token_ngrams(col, n: int, short_docs: bool = True) -> Column:
+    """Space-joined n-token windows of ``col``, in order, from one
+    tokenization per row. A document with fewer than ``n`` tokens gives
+    one window holding all of them (``""`` when it has none, NULL text
+    included) when ``short_docs``, else no windows."""
+
+    def windows(toks):
+        grams = F.transform(
+            F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+        )
+        if short_docs:
+            return grams
+        return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
+
+    return _with_tokens(col, windows)
+
+
 def token_count(col) -> Column:
     return F.size(tokens(col)).cast("bigint")
 
@@ -50,17 +80,27 @@ def occurrence_count(col, needle: str) -> Column:
 
 def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """n_tokens / n_chars / avg token length per document."""
-    toks = tokens(text_col)
-    return df.withColumns(
-        {
-            "n_tokens": F.size(toks).cast("bigint"),
-            "n_chars_actual": F.length(text_col).cast("bigint"),
-            "avg_token_len": F.round(
+    stats = _with_tokens(
+        text_col,
+        lambda toks: F.struct(
+            F.size(toks).cast("bigint").alias("n"),
+            F.round(
                 F.aggregate(toks, F.lit(0.0), lambda acc, t: acc + F.length(t))
                 / F.greatest(F.size(toks), F.lit(1)),
                 6,
-            ),
-        }
+            ).alias("avg"),
+        ),
+    )
+    return (
+        df.withColumn("_tok_stats", stats)
+        .withColumns(
+            {
+                "n_tokens": F.col("_tok_stats.n"),
+                "n_chars_actual": F.length(text_col).cast("bigint"),
+                "avg_token_len": F.col("_tok_stats.avg"),
+            }
+        )
+        .drop("_tok_stats")
     )
 
 
@@ -1388,14 +1428,7 @@ def dsir_importance(
     from .scale import ensure_min_partitions, src_bytes_hint
 
     def bucketed(frame: DataFrame, keep_id: bool):
-        toks = tokens(text_col)
-        grams = F.when(
-            F.size(toks) >= 2,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - 2),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 2)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
+        grams = _token_ngrams(text_col, 2, short_docs=False)
         cols = [F.col(id_col)] if keep_id else []
         ex = ensure_min_partitions(
             frame, src_bytes=src_bytes_hint(frame)
